@@ -41,6 +41,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 @dataclass
 class ColoringResult:
@@ -77,10 +79,7 @@ def greedy_coloring(edges: DataFrame, max_rounds: int = 60,
     ALL vertex ids), isolated vertices absent from the edge table are
     included (colour 0 in round 0).
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
+    und = simple_edges(edges)
     sym = und.unionAll(und.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
     verts = sym.select(F.col("a").alias("id")).distinct()

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 _DEC = "decimal(38,0)"
 
 
@@ -39,13 +41,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
     Vertices missing from ``labels`` form implicit singleton communities
     (their label defaults to their own id)."""
-    s = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    s = simple_edges(edges).localCheckpoint(eager=True)
     lab = labels.select("id", "label")
     la = s.join(lab.withColumnRenamed("id", "a"), "a", "left") \
           .withColumnRenamed("label", "la")
@@ -94,13 +90,7 @@ def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     SQL oracle). Scale: two label equi-joins + three hash aggregates
     keyed by label — map-side partials collapse each community.
     """
-    s = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    s = simple_edges(edges).localCheckpoint(eager=True)
     lab = labels.select("id", "label")
     tagged = (
         s.join(lab.withColumnRenamed("id", "a")

@@ -23,8 +23,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.graph import simple_edges
+from pagerank_spark.plans.fixpoint import fixpoint, pin, resume_point
 
 
 @dataclass
@@ -32,18 +35,6 @@ class ComponentsResult:
     labels: DataFrame          # (id long, component long) — component = min id
     rounds: int
     converged: bool
-
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected simple graph: drop self-loops, orient small->large, dedupe."""
-    return (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -73,24 +64,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
         F.col("v").alias("src"), F.col("m").alias("dst")
     ).unionAll(m.select(F.col("u").alias("src"), F.col("m").alias("dst")))
     return out.distinct()
-
-
-def _sig_metrics() -> list:
-    # decimal(38,0) sum: no overflow under ANSI mode at any realistic edge count
-    return [
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-    ]
-
-
-def _observed_checkpoint(edges: DataFrame, name: str) -> tuple[DataFrame, tuple[int, int]]:
-    """Materialize a round's edge set AND collect its convergence signature
-    in the same Spark job (observed metrics on the localCheckpoint) — one
-    job per round, not a round job plus a signature scan."""
-    obs = Observation(name)
-    out = edges.observe(obs, *_sig_metrics()).localCheckpoint(eager=True)
-    got = obs.get
-    return out, (int(got["n"]), int(got["h"] or 0))
 
 
 def connected_components(
@@ -125,45 +98,28 @@ def connected_components(
     IS the star-contracted edge multiset, so nothing else needs saving).
     ``checkpointer=None`` keeps the in-memory ``localCheckpoint`` path.
     """
-    from pagerank_spark.plans.checkpoint import StageTimer
-
-    start_round = 0
-    if checkpointer is not None and not resume:
-        checkpointer.reset()
-    if checkpointer is not None and resume and \
-            (last := checkpointer.last_committed()) is not None:
-        # re-materialize the committed state; the convergence signature is
-        # a deterministic function of the edge multiset, so recomputing it
-        # on load reproduces exactly what the killed run observed
-        cur, sig = _observed_checkpoint(checkpointer.load(last), "cc_resume")
-        start_round = last
-    else:
+    start_round, cur = resume_point(checkpointer, resume)
+    if cur is None:
         base = edges
         if prior_labels is not None:
             base = edges.select("src", "dst").unionAll(
                 prior_labels.select(F.col("id").alias("src"),
                                     F.col("component").alias("dst")))
-        cur, sig = _observed_checkpoint(_canonical(base), "cc_init")
-    rounds = start_round
-    converged = False
-    timer = StageTimer()
-    for rounds in range(start_round + 1, max_rounds + 1):
-        nxt, nsig = _observed_checkpoint(
-            _small_star(_large_star(cur)), f"cc_round_{rounds}")
-        if checkpointer is not None:
-            # durable commit off the in-memory blocks (no recompute), then
-            # keep iterating on the in-memory copy
-            checkpointer.save(rounds, nxt)
-            checkpointer.record(rounds, nxt, n_edges=nsig[0],
-                                state_hash=str(nsig[1]),
-                                converged=(nsig == sig),
-                                wall_ms=timer.lap_ms())
-        cur.unpersist()  # drop the previous round's checkpoint blocks
-        cur = nxt
-        if nsig == sig:
-            converged = True
-            break
-        sig = nsig
+        cur = simple_edges(base).select(F.col("a").alias("src"),
+                                        F.col("b").alias("dst"))
+    # the round state's signature: edge count and the decimal(38,0) sum of
+    # xxhash64(src, dst) (no overflow under ANSI mode at any realistic
+    # count; a string in the metrics row). It is a deterministic function of
+    # the edge multiset, so taking it again on a resumed state reproduces
+    # what the killed run saw
+    signature = [F.count(F.lit(1)).alias("n_edges"),
+                 F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
+                 .cast("string").alias("state_hash")]
+    cur, sig = pin(cur, *signature)
+    run = fixpoint(cur, lambda cur, _: _small_star(_large_star(cur)),
+                   signature, lambda sig, prev: sig == prev, max_rounds,
+                   checkpointer=checkpointer, start=start_round, stats=sig)
+    cur, rounds = run.state, run.rounds
 
     # final star edges: (child -> root). canonicalize (larger endpoint is child)
     child_root = cur.select(
@@ -185,4 +141,4 @@ def connected_components(
         .join(child_root, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
     )
-    return ComponentsResult(labels=labels, rounds=rounds, converged=converged)
+    return ComponentsResult(labels=labels, rounds=rounds, converged=run.converged)

@@ -20,8 +20,7 @@ independent of the power-law degree head — so no single task ever sorts a
 hub's full neighbor multiset (the skew hazard of the naive
 row_number-over-all-neighbors formulation this replaces). The
 changed-vertex count rides each round's materialization as an observed
-metric (one Spark job per round), and localCheckpoint truncates lineage,
-exactly as in the sibling loops.
+metric (one Spark job per round, plans/fixpoint.py).
 
 Scale note: round count is bounded by the graph's core depth (empirically
 O(10-100) on web graphs, far below the O(V) of sequential peeling). The
@@ -34,8 +33,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.graph import simple_edges, symmetric_edges
+from pagerank_spark.plans.fixpoint import fixpoint
 
 
 @dataclass
@@ -47,28 +49,19 @@ class CorenessResult:
 
 def coreness(edges: DataFrame, max_rounds: int = 100) -> CorenessResult:
     """Exact core number per vertex of the undirected simple graph."""
-    simple = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-    sym = simple.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        simple.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).localCheckpoint(eager=True)
-
+    sym = symmetric_edges(simple_edges(edges)).localCheckpoint(eager=True)
     core = (
         sym.groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).alias("core"))
         .localCheckpoint(eager=True)
     )
-    rounds = 0
-    converged = False
     # cumulative neighbor count from the largest core value downwards;
     # partitions hold <= distinct-core-values rows per id (bounded, no
     # hub skew), unlike a row_number over the raw neighbor multiset
     w = (Window.partitionBy("id").orderBy(F.desc("core"))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    for rounds in range(1, max_rounds + 1):
+
+    def step(core: DataFrame, _prev) -> DataFrame:
         neigh = sym.join(
             core.select(F.col("id").alias("dst"), "core"), "dst"
         ).select(F.col("src").alias("id"), "core")
@@ -83,18 +76,11 @@ def coreness(edges: DataFrame, max_rounds: int = 100) -> CorenessResult:
             .groupBy("id")
             .agg(F.max(F.least(F.col("core"), F.col("cum"))).alias("new_core"))
         )
-        obs = Observation(f"coreness_round_{rounds}")
-        new_core = (
-            core.join(hidx, "id")
-            .observe(obs, F.sum((F.col("new_core") != F.col("core"))
-                                .cast("int")).alias("changed"))
-            .select("id", F.col("new_core").alias("core"))
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["changed"] or 0)
-        core.unpersist()
-        core = new_core
-        if changed == 0:
-            converged = True
-            break
-    return CorenessResult(cores=core, rounds=rounds, converged=converged)
+        return core.join(hidx, "id").select(
+            "id", F.col("new_core").alias("core"),
+            (F.col("new_core") != F.col("core")).cast("int").alias("chg"))
+
+    run = fixpoint(core, step, [F.sum("chg").alias("changed")],
+                   lambda stats, _: not stats["changed"], max_rounds)
+    return CorenessResult(cores=run.state.select("id", "core"), rounds=run.rounds,
+                          converged=run.converged)

@@ -28,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 @dataclass
 class DensestResult:
@@ -46,10 +48,7 @@ def densest_subgraph(edges: DataFrame, epsilon: float = 0.1,
         raise ValueError(f"epsilon must be > 0: {epsilon}")
     spark = edges.sparkSession
     factor = 2.0 * (1.0 + epsilon)
-    e = (edges.filter(F.col("src") != F.col("dst"))
-         .select(F.least("src", "dst").alias("a"),
-                 F.greatest("src", "dst").alias("b"))
-         .distinct().localCheckpoint(eager=True))
+    e = simple_edges(edges).localCheckpoint(eager=True)
     v = (e.select(F.col("a").alias("id"))
          .unionByName(e.select(F.col("b").alias("id"))).distinct()
          .localCheckpoint(eager=True))

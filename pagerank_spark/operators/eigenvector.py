@@ -31,10 +31,13 @@ ppr_batch seed validation).
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import fixpoint, release
 
 
 @dataclass
@@ -72,36 +75,31 @@ def eigenvector_centrality(
         vertices = vertices.unionAll(universe.select("id")).distinct()
     vertices = vertices.localCheckpoint(eager=True)
 
-    state = vertices.select("id", F.lit(1.0).alias("eig"))
-    pinned: DataFrame | None = None
-    for it in range(1, iterations + 1):
-        contrib_expr = (F.col("eig") * F.col(weight_col)
-                        if weight_col else F.col("eig"))
-        gathered = (
-            e.join(state.select(F.col("id").alias("src"), "eig"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(contrib_expr).alias("eig"))
-        )
-        # fused L1 total: rides the materialization, one job per round
-        obs = Observation(f"eig_{it}")
-        raw = (gathered.observe(obs, F.sum(F.abs("eig")).alias("l1"))
-               .localCheckpoint(eager=True))
-        total = obs.get["l1"]
-        total = float(total) if total is not None else 0.0
-        if not total > 0.0 or total != total or total == float("inf"):
-            raw.unpersist()
+    contrib_expr = F.col("eig") * F.col(weight_col) if weight_col else F.col("eig")
+    rounds = itertools.count(1)
+
+    def normalized(raw: DataFrame, stats) -> DataFrame:  # state = raw gather
+        return raw.select("id", (F.col("eig") / F.lit(stats["l1"])).alias("eig"))
+
+    def step(raw: DataFrame, prev) -> DataFrame:
+        return (e.join(normalized(raw, prev).withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id")).agg(F.sum(contrib_expr).alias("eig")))
+
+    def drained(stats, _prev) -> bool:
+        it, total = next(rounds), float(stats["l1"] or 0.0)
+        if not 0.0 < total < float("inf"):
             raise ValueError(
                 f"eigenvector mass degenerated at iteration {it}: "
                 f"L1 total = {total!r} (graph drains under pure power "
                 f"iteration; use pagerank() for a teleport-damped variant)")
-        if pinned is not None:
-            pinned.unpersist()
-        pinned = raw
-        state = raw.select("id", (F.col("eig") / F.lit(total)).alias("eig"))
+        return False
 
+    run = fixpoint(vertices.select("id", F.lit(1.0).alias("eig")), step,
+                   [F.sum(F.abs("eig")).alias("l1")], drained, iterations,
+                   stats={"l1": 1.0})
     scores = (
-        vertices.join(state, "id", "left")
+        vertices.join(normalized(run.state, run.stats), "id", "left")
         .select("id", F.coalesce("eig", F.lit(0.0)).alias("eig"))
     )
-    e.unpersist()
+    release(e)
     return EigenvectorResult(scores=scores, iterations=iterations)

@@ -246,6 +246,22 @@ def graph_from_pages(spark: SparkSession, pages: DataFrame,
                        universe=d.select("id"))
 
 
+def simple_edges(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph of a (src, dst) edge table: ``(a, b)``
+    with a < b, self-loops dropped, duplicates and reversed pairs merged."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .distinct()
+    )
+
+
+def symmetric_edges(simple: DataFrame, *carry: str) -> DataFrame:
+    """Both directions ``(src, dst, *carry)`` of a simple ``(a, b)`` edge set."""
+    return simple.select(F.col("a").alias("src"), F.col("b").alias("dst"), *carry).unionAll(
+        simple.select(F.col("b").alias("src"), F.col("a").alias("dst"), *carry))
+
+
 # ---------------------------------------------------------------------------
 # Skew analysis: degree histogram -> hot-vertex salt fan-out.
 # The DataFrame analogue of the reference's degree binning + small/large

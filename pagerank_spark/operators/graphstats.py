@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 _DEC = "decimal(38,0)"
 
 
@@ -291,10 +293,7 @@ def rich_club(edges: DataFrame) -> DataFrame:
     The only E-scale work is the simple-graph projection, one degree
     aggregate, and one J1-shaped degree join per endpoint.
     """
-    s = (edges.filter(F.col("src") != F.col("dst"))
-         .select(F.least("src", "dst").alias("a"),
-                 F.greatest("src", "dst").alias("b"))
-         .distinct())
+    s = simple_edges(edges)
     deg = (s.select(F.col("a").alias("id"))
            .unionAll(s.select(F.col("b").alias("id")))
            .groupBy("id").agg(F.count(F.lit(1)).alias("d")))

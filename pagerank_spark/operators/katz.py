@@ -19,8 +19,8 @@ comparison grid).
 
 Scale shape: per iteration ONE join+aggregate gather over the O(E) edge
 table (pinned once, re-scanned per round); only O(V) score state moves.
-Convergence (tol mode) rides the gather as an observed metric — no extra
-O(V) scan and no driver-side collect beyond the scalar. Hot destinations
+Convergence (tol mode) rides the gather as an observed metric of the
+round's one job (plans/fixpoint.py) — no extra O(V) scan. Hot destinations
 reuse the engine's two-level salted aggregation via the shared
 contribution kernel discipline: the gather is groupBy(dst).sum, which
 Spark partial-aggregates map-side, so a hub dst reduces to one row per
@@ -31,8 +31,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import fixpoint, release
 
 
 @dataclass
@@ -77,20 +79,16 @@ def katz_centrality(
         vertices = vertices.unionAll(universe.select("id")).distinct()
     vertices = vertices.localCheckpoint(eager=True)
 
-    state = vertices.select("id", F.lit(beta).alias("katz"))
-    prev_pinned: DataFrame | None = None
-    it = 0
-    l1 = float("inf")
-    converged = False
-    for it in range(1, max_iter + 1):
-        contrib_expr = (F.col("katz") * F.col(weight_col)
-                        if weight_col else F.col("katz"))
+    contrib_expr = (F.col("katz") * F.col(weight_col)
+                    if weight_col else F.col("katz"))
+
+    def step(state: DataFrame, _prev) -> DataFrame:
         gathered = (
             e.join(state.select(F.col("id").alias("src"), "katz"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum(contrib_expr).alias("contrib"))
         )
-        new_state = (
+        return (
             state.select("id", F.col("katz").alias("prev"))
             .join(gathered, "id", "left")
             .select(
@@ -100,20 +98,11 @@ def katz_centrality(
                 "prev",
             )
         )
-        # fused convergence metric: rides the materialization, one job/round
-        obs = Observation(f"katz_{it}")
-        new_state = new_state.observe(
-            obs, F.sum(F.abs(F.col("katz") - F.col("prev"))).alias("l1"))
-        new_state = new_state.select("id", "katz").localCheckpoint(eager=True)
-        l1 = float(obs.get["l1"])
-        if prev_pinned is not None:
-            prev_pinned.unpersist()
-        prev_pinned = new_state
-        state = new_state
-        if tol is not None and l1 <= tol:
-            converged = True
-            break
 
-    e.unpersist()
-    return KatzResult(scores=state.select("id", "katz"), iterations=it,
-                      converged=converged, l1_diff=l1)
+    run = fixpoint(vertices.select("id", F.lit(beta).alias("katz")), step,
+                   [F.sum(F.abs(F.col("katz") - F.col("prev"))).alias("l1")],
+                   lambda stats, _: tol is not None and stats["l1"] <= tol,
+                   max_iter)
+    release(e)
+    return KatzResult(scores=run.state.select("id", "katz"), iterations=run.rounds,
+                      converged=run.converged, l1_diff=run.stats["l1"])

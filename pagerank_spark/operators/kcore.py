@@ -16,17 +16,19 @@ past the fixpoint are no-ops.
 
 Scale shape: each round is one groupBy-count over the surviving edge set
 plus two semi-joins to filter it; the edge set only ever shrinks. The
-number of removed vertices rides each round's materialization as an
-observed metric (one Spark job per round), and localCheckpoint truncates
-lineage exactly as in the components/labelprop loops.
+surviving edge count rides each round's materialization as an observed
+metric (one Spark job per round, plans/fixpoint.py).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.graph import simple_edges
+from pagerank_spark.plans.fixpoint import fixpoint, pin
 
 
 @dataclass
@@ -38,54 +40,32 @@ class KCoreResult:
     converged: bool
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    return (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-
-
 def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> KCoreResult:
     """Peel to the k-core; returns surviving vertices with in-core degree."""
-    obs0 = Observation("kcore_init")
-    cur = (
-        _canonical(edges)
-        .observe(obs0, F.count(F.lit(1)).alias("n_edges"))
-        .localCheckpoint(eager=True)
-    )
-    n_before = int(obs0.get["n_edges"] or 0)
-    rounds = 0
-    converged = False
-    for rounds in range(1, max_rounds + 1):
+
+    def step(cur: DataFrame, _prev) -> DataFrame:
         deg = (
             cur.select(F.col("a").alias("id")).unionAll(cur.select(F.col("b").alias("id")))
             .groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("id")
-        # the convergence signal rides the surviving-edge materialization:
-        # a vertex is removed iff it had >=1 edge and all its edges die with
-        # it, so edge-count equality <=> no vertex removed this round
-        obs = Observation(f"kcore_round_{rounds}")
-        nxt = (
+        return (
             cur.join(keep.select(F.col("id").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("id").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("n_edges"))
-            .localCheckpoint(eager=True)
         )
-        n_after = int(obs.get["n_edges"] or 0)
-        cur.unpersist()
-        cur = nxt
-        if n_after == n_before:
-            converged = True
-            break
-        n_before = n_after
 
+    # a vertex is removed iff it had >=1 edge and all its edges die with
+    # it, so edge-count equality <=> no vertex removed this round
+    count = [F.count(F.lit(1)).alias("n_edges")]
+    cur, n_edges = pin(simple_edges(edges), *count)
+    run = fixpoint(cur, step, count, lambda stats, prev: stats == prev,
+                   max_rounds, stats=n_edges)
+    cur = run.state
     deg = (
         cur.select(F.col("a").alias("id")).unionAll(cur.select(F.col("b").alias("id")))
         .groupBy("id").agg(F.count(F.lit(1)).alias("core_deg"))
         .filter(F.col("core_deg") >= k)
     )
-    return KCoreResult(vertices=deg, edges=cur, k=k, rounds=rounds,
-                       converged=converged)
+    return KCoreResult(vertices=deg, edges=cur, k=k, rounds=run.rounds,
+                       converged=run.converged)

@@ -20,8 +20,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.graph import simple_edges, symmetric_edges
+from pagerank_spark.plans.fixpoint import fixpoint, resume_point
 
 
 @dataclass
@@ -29,6 +32,38 @@ class LabelPropResult:
     labels: DataFrame      # (id long, label long)
     rounds: int
     converged: bool
+
+
+# vertices whose label moved this round, observed on the round's own
+# materialization: one Spark job per round, not a round job plus a
+# compare-join job
+def _changed() -> list:
+    return [F.sum("chg").alias("changed")]
+
+
+def _settled(stats, _prev) -> bool:
+    return not stats["changed"]
+
+
+def _vertices(sym: DataFrame, universe: DataFrame | None) -> DataFrame:
+    vertices = sym.select(F.col("src").alias("id")).distinct()
+    if universe is not None:
+        vertices = vertices.unionAll(universe.select("id")).distinct()
+    return vertices
+
+
+def _best(counts: DataFrame) -> DataFrame:
+    """(id, new_label): the label with the largest ``c`` per vertex, ties ->
+    min label — a max over struct(c, -label), no window function."""
+    return counts.groupBy("id").agg(
+        F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("s")
+    ).select("id", (-F.col("s.nl")).alias("new_label"))
+
+
+def _relabel(labels: DataFrame, best: DataFrame) -> DataFrame:
+    return labels.join(best, "id", "left").select(
+        "id", F.coalesce("new_label", F.col("label")).alias("label"),
+        (F.col("new_label") != F.col("label")).cast("int").alias("chg"))
 
 
 def label_propagation(
@@ -45,74 +80,25 @@ def label_propagation(
     continues a killed run from the last committed round, the same
     superstep-resume contract as ``pagerank()``. ``None`` keeps the
     in-memory ``localCheckpoint`` path."""
-    from pagerank_spark.plans.checkpoint import StageTimer
+    sym = symmetric_edges(simple_edges(edges)).localCheckpoint(eager=True)
+    vertices = _vertices(sym, universe).localCheckpoint(eager=True)
 
-    sym = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-    sym = sym.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        sym.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    if universe is not None:
-        vertices = vertices.unionAll(universe.select("id")).distinct()
-    vertices = vertices.localCheckpoint(eager=True)
-
-    start_round = 0
-    if checkpointer is not None and not resume:
-        checkpointer.reset()
-    if checkpointer is not None and resume and \
-            (last := checkpointer.last_committed()) is not None:
-        labels = checkpointer.load(last).localCheckpoint(eager=True)
-        start_round = last
-    else:
+    start_round, labels = resume_point(checkpointer, resume)
+    if labels is None:
         labels = vertices.select("id", F.col("id").alias("label"))
-    converged = False
-    rounds = start_round
-    timer = StageTimer()
-    for rounds in range(start_round + 1, max_rounds + 1):
+
+    def step(labels: DataFrame, _prev) -> DataFrame:
         # neighbor labels: for edge (src,dst), vertex src sees label(dst)
         neigh = sym.join(
             labels.select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label")
-        counts = neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c"))
-        # most frequent, ties -> min label: max over struct(c, -label)
-        best = counts.groupBy("id").agg(
-            F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("s")
-        ).select("id", (-F.col("s.nl")).alias("new_label"))
-        # the fixpoint check rides the round's materialization as an
-        # observed metric (count of vertices whose label moved) — one Spark
-        # job per round, not a round job plus a compare-join job
-        obs = Observation(f"lp_changed_{rounds}")
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id", F.coalesce("new_label", F.col("label")).alias("label"),
-                (F.col("new_label") != F.col("label")).cast("int").alias("chg"))
-            .observe(obs, F.sum("chg").alias("changed"))
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["changed"] or 0)
-        if checkpointer is not None:
-            # durable commit off the in-memory blocks (no recompute); the
-            # (id, label) frame is the full round state
-            state = new_labels.select("id", "label")
-            checkpointer.save(rounds, state)
-            checkpointer.record(rounds, state, changed=changed,
-                                converged=(changed == 0),
-                                wall_ms=timer.lap_ms())
-        # drop the previous round's checkpoint blocks (no-op on the lazy
-        # initial select; frees the resumed checkpoint after round 1)
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    return LabelPropResult(labels=labels.select("id", "label"), rounds=rounds,
-                           converged=converged)
+        return _relabel(labels, _best(
+            neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c"))))
+
+    run = fixpoint(labels, step, _changed(), _settled, max_rounds,
+                   checkpointer=checkpointer, start=start_round)
+    return LabelPropResult(labels=run.state.select("id", "label"),
+                           rounds=run.rounds, converged=run.converged)
 
 
 def weighted_label_propagation(
@@ -139,51 +125,26 @@ def weighted_label_propagation(
     hash-aggregate shuffles, no window, O(E)+O(V) state — the 100-TB plan
     is unchanged, only COUNT becomes SUM(w).
     """
-    sym = (
+    sym = symmetric_edges(
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"),
                 F.greatest("src", "dst").alias("b"),
                 F.col(weight_col).cast("double").alias("w"))
-        .groupBy("a", "b").agg(F.sum("w").alias("w"))
-    )
-    sym = sym.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w").unionAll(
-        sym.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
+        .groupBy("a", "b").agg(F.sum("w").alias("w")), "w"
     ).localCheckpoint(eager=True)
+    vertices = _vertices(sym, universe).localCheckpoint(eager=True)
 
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    if universe is not None:
-        vertices = vertices.unionAll(universe.select("id")).distinct()
-    vertices = vertices.localCheckpoint(eager=True)
-
-    labels = vertices.select("id", F.col("id").alias("label"))
-    converged = False
-    rounds = 0
-    for rounds in range(1, max_rounds + 1):
+    def step(labels: DataFrame, _prev) -> DataFrame:
         neigh = sym.join(
             labels.select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label", "w")
-        counts = neigh.groupBy("id", "label").agg(F.sum("w").alias("c"))
-        best = counts.groupBy("id").agg(
-            F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("s")
-        ).select("id", (-F.col("s.nl")).alias("new_label"))
-        obs = Observation(f"wlp_changed_{rounds}")
-        new_labels = (
-            labels.join(best, "id", "left")
-            .select(
-                "id", F.coalesce("new_label", F.col("label")).alias("label"),
-                (F.col("new_label") != F.col("label")).cast("int").alias("chg"))
-            .observe(obs, F.sum("chg").alias("changed"))
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["changed"] or 0)
-        if rounds > 1:
-            labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    return LabelPropResult(labels=labels.select("id", "label"), rounds=rounds,
-                           converged=converged)
+        return _relabel(labels, _best(
+            neigh.groupBy("id", "label").agg(F.sum("w").alias("c"))))
+
+    run = fixpoint(vertices.select("id", F.col("id").alias("label")), step,
+                   _changed(), _settled, max_rounds)
+    return LabelPropResult(labels=run.state.select("id", "label"),
+                           rounds=run.rounds, converged=run.converged)
 
 
 def seeded_label_propagation(
@@ -204,50 +165,23 @@ def seeded_label_propagation(
     the only additions are a labeled-neighbor filter and the pinned-seed
     coalesce. Unreached vertices return ``label = NULL``.
     """
-    sym = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
-    sym = sym.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        sym.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    vertices = sym.select(F.col("src").alias("id")).distinct()
-    if universe is not None:
-        vertices = vertices.unionAll(universe.select("id")).distinct()
+    sym = symmetric_edges(simple_edges(edges)).localCheckpoint(eager=True)
     seed_tbl = seeds.select("id", F.col("label").cast("long").alias("seed_label"))
-    state = (vertices.join(seed_tbl, "id", "left")
+    state = (_vertices(sym, universe).join(seed_tbl, "id", "left")
              .select("id", F.col("seed_label").alias("label"), "seed_label")
              .localCheckpoint(eager=True))
-    converged = False
-    rounds = 0
-    for rounds in range(1, max_rounds + 1):
+
+    def step(state: DataFrame, _prev) -> DataFrame:
         neigh = sym.join(
             state.filter(F.col("label").isNotNull())
             .select(F.col("id").alias("dst"), "label"), "dst"
         ).select(F.col("src").alias("id"), "label")
-        counts = neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c"))
-        best = counts.groupBy("id").agg(
-            F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("s")
-        ).select("id", (-F.col("s.nl")).alias("new_label"))
-        obs = Observation(f"slp_changed_{rounds}")
-        nxt = (
-            state.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("seed_label", "new_label", "label").alias("label"),
-                "seed_label",
-                (~F.coalesce("seed_label", "new_label", "label")
-                 .eqNullSafe(F.col("label"))).cast("int").alias("chg"))
-            .observe(obs, F.sum("chg").alias("changed"))
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["changed"] or 0)
-        state.unpersist()
-        state = nxt.select("id", "label", "seed_label")
-        if changed == 0:
-            converged = True
-            break
-    return LabelPropResult(labels=state.select("id", "label"), rounds=rounds,
-                           converged=converged)
+        best = _best(neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c")))
+        label = F.coalesce("seed_label", "new_label", "label")
+        return state.join(best, "id", "left").select(
+            "id", label.alias("label"), "seed_label",
+            (~label.eqNullSafe(F.col("label"))).cast("int").alias("chg"))
+
+    run = fixpoint(state, step, _changed(), _settled, max_rounds)
+    return LabelPropResult(labels=run.state.select("id", "label"),
+                           rounds=run.rounds, converged=run.converged)

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 def link_prediction_scores(
     edges: DataFrame,
@@ -45,13 +47,7 @@ def link_prediction_scores(
     partners v sharing ≥1 neighbor, ranked by (common desc, v asc). Each
     unordered pair is scored once and then ranked from both endpoints.
     """
-    s = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    s = simple_edges(edges).localCheckpoint(eager=True)
     sym = s.unionAll(s.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
            .select(F.col("a").alias("w"), F.col("b").alias("x"))
     deg = sym.groupBy("w").agg(F.count(F.lit(1)).alias("d"))

@@ -31,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 @dataclass
 class MatchingResult:
@@ -56,10 +58,7 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 40) -> MatchingResult:
     Returns the matched edges as ``(a, b, round)`` with ``a < b`` and the
     round each edge was decided in.
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
+    und = simple_edges(edges)
     active = und.select(
         "a", "b",
         F.struct(_edge_priority(F.col("a"), F.col("b")).alias("h"),

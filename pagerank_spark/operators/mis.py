@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 @dataclass
 class MISResult:
@@ -55,10 +57,7 @@ def maximal_independent_set(edges: DataFrame, max_rounds: int = 40,
     vertices absent from the edge table are included (they join the MIS in
     round 0, having no neighbours).
     """
-    sym = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
+    sym = simple_edges(edges)
     sym = sym.unionAll(sym.select(F.col("b").alias("a"),
                                   F.col("a").alias("b")))
     verts = sym.select(F.col("a").alias("id")).distinct()

@@ -29,8 +29,9 @@ Physical design (what makes this hold at 10^12 edges):
     child_kernal (kernel_acsr.cu:93-120) for free — plus explicit salting
     for power-law head destinations (two-level groupBy), the analogue of
     the one-block-per-hot-vertex kernel (kernel_bblock.cu:219-260).
-  * each superstep checkpoints through plans/checkpoint.py: lineage stays
-    O(1), and a dir-backed run resumes from the last committed superstep.
+  * each superstep runs through plans/fixpoint.py and checkpoints through
+    plans/checkpoint.py: lineage stays O(1), and a dir-backed run resumes
+    from the last committed superstep.
 """
 
 from __future__ import annotations
@@ -39,11 +40,12 @@ import math
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.graph import LinkGraph, hot_vertex_salts, salted_edges
-from pagerank_spark.plans.checkpoint import StageTimer, SuperstepCheckpointer
+from pagerank_spark.plans.checkpoint import SuperstepCheckpointer
+from pagerank_spark.plans.fixpoint import fixpoint, resume_point
 
 ALPHA_DEFAULT = 0.85   # kernel_bblock.cu:876
 TOL_DEFAULT = 1e-6     # kernel_bblock.cu:877 (eps = 1e-6*n under the Σ=n view)
@@ -165,42 +167,32 @@ def pagerank(
         edges = edges.persist()
         edges.count()
 
-    # Superstep state carries (id, rank, prev_rank, is_dangling) so ONE
-    # aggregate over the checkpointed state yields the L1 norm (A4), the
-    # NEXT iteration's dangling mass (A3), and the conservation check —
-    # 2 jobs per superstep (materialize + scan-agg) instead of the naive
-    # 3 jobs with 2 extra joins (the DataFrame analogue of the reference
-    # fusing `remain_value` into its SpMV kernels, kernel_bblock.cu:966).
-    state: DataFrame | None = None
-    start_iter = 0
-    if not resume:
-        # fresh run: clear any previous run's committed supersteps so a
-        # later resume cannot pick up stale higher-numbered checkpoints
-        ckpt.reset()
-    if resume:
-        last = ckpt.last_committed()
-        if last is not None:
-            start_iter = last
-            state = ckpt.load(last)
-            if "is_dangling" not in state.columns:  # pre-fusion checkpoint
-                state = state.join(graph.vertices.select("id", "is_dangling"), "id")
-            if "prev_rank" not in state.columns:
-                state = state.withColumn("prev_rank", F.col("rank"))
-            # teleport/checkpoint consistency: a personalized run's state
-            # carries its `p` column. Resuming with teleport=None must NOT
-            # silently fall back to uniform teleport (different fixed
-            # point!) — reuse the stored p. Resuming with a DIFFERENT
-            # teleport must not silently keep the stale stored p — replace
-            # it with the one passed.
-            if "p" in state.columns:
-                if teleport is None:
-                    teleport = state.select("id", "p")
-                else:
-                    state = state.drop("p")
-            if teleport is not None and "p" not in state.columns:
-                state = state.join(
-                    teleport.select("id", "p"), "id", "left"
-                ).withColumn("p", F.coalesce("p", F.lit(0.0)))
+    # Superstep state carries (id, rank, prev_rank, is_dangling) so the
+    # superstep's own observed aggregate yields the L1 norm (A4), the NEXT
+    # iteration's dangling mass (A3), and the conservation check — no extra
+    # joins (the DataFrame analogue of the reference fusing `remain_value`
+    # into its SpMV kernels, kernel_bblock.cu:966).
+    start_iter, state = resume_point(ckpt, resume)
+    if state is not None:
+        if "is_dangling" not in state.columns:  # pre-fusion checkpoint
+            state = state.join(graph.vertices.select("id", "is_dangling"), "id")
+        if "prev_rank" not in state.columns:
+            state = state.withColumn("prev_rank", F.col("rank"))
+        # teleport/checkpoint consistency: a personalized run's state
+        # carries its `p` column. Resuming with teleport=None must NOT
+        # silently fall back to uniform teleport (different fixed
+        # point!) — reuse the stored p. Resuming with a DIFFERENT
+        # teleport must not silently keep the stale stored p — replace
+        # it with the one passed.
+        if "p" in state.columns:
+            if teleport is None:
+                teleport = state.select("id", "p")
+            else:
+                state = state.drop("p")
+        if teleport is not None and "p" not in state.columns:
+            state = state.join(
+                teleport.select("id", "p"), "id", "left"
+            ).withColumn("p", F.coalesce("p", F.lit(0.0)))
     if state is None:
         if init_ranks is not None:
             # warm start (incremental recompute): seed from a previous run's
@@ -260,26 +252,25 @@ def pagerank(
         from pagerank_spark.operators.graph import degree_bins
         bins = degree_bins(graph.vertices).select("id", "bin")
 
-    converged = False
-    l1 = float("inf")
-    it = start_iter
     personalized = teleport is not None
-    for it in range(start_iter + 1, max_iter + 1):
-        timer = StageTimer()
+    carry = ["prev_rank", "is_dangling"] + (["p"] if personalized else [])
+
+    def mass_of(prev: dict[str, Any]) -> float:
+        return float(prev["next_mass"] or 0.0) if dangling_redistribution else 0.0
+
+    def step(state: DataFrame, prev: dict[str, Any]) -> DataFrame:
+        mass = mass_of(prev)
         if personalized:
             # per-vertex teleport: rank' = α·contrib + (α·mass + 1−α)·p
             remain_expr = F.lit(alpha * mass + 1.0 - alpha) * F.col("p")
         else:
             remain_expr = F.lit(alpha * mass / n + (1.0 - alpha) / n)
-
-        phase_ms: dict[str, float] = {}
         contribs = _contributions(edges, state.select("id", "rank"), use_salt,
                                   strategy=strategy)
         # left join against the full vertex universe (carried by `state`):
         # vertices with no in-edges still receive `remain`
         # (kernel_bblock.cu:333-339).
-        carry = ["prev_rank", "is_dangling"] + (["p"] if personalized else [])
-        new_state = (
+        return (
             state.select("id", F.col("rank").alias("prev_rank"), "is_dangling",
                          *(["p"] if personalized else []))
             .join(contribs.withColumnRenamed("dst", "id"), "id", "left")
@@ -290,69 +281,47 @@ def pagerank(
                 *carry,
             )
         )
-        # fused A4 (L1) + A5 (L2) + A3 (next dangling mass) + conservation,
-        # collected as OBSERVED metrics of the materialization itself: the
-        # superstep is ONE Spark job (gather join + contribution agg + axpy
-        # + checkpoint write + stats), not a materialize job plus a second
-        # O(V) scan-aggregate — the DataFrame analogue of the reference
-        # fusing its convergence reduction into the same kernel stream
-        # (kernel_bblock.cu:1066-1072 runs on the buffers already on
-        # device). obs.get returns driver-side immediately after save.
-        obs = Observation(f"pr_stats_{it}")
-        new_state = new_state.observe(
-            obs,
-            F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("l1"),
-            F.sum(F.pow(F.col("rank") - F.col("prev_rank"), 2)).alias("l2sq"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("next_mass"),
-            F.sum("rank").alias("mass_sum"),
-        )
-        new_state = ckpt.save(it, new_state)
-        # the reference times its phases separately (dangling/pull/g1/g2,
-        # kernel_bblock.cu:1087-1092). The Spark analogue of pull+g1+g2+
-        # convergence is the fused job above — timed as `materialize`;
-        # `stats` is the driver-side metric retrieval (near-zero since the
-        # scan rode along with the write); per-bin telemetry, when on, a
-        # genuine extra job.
-        phase_ms["materialize"] = timer.lap_ms()
 
-        stats = obs.get
-        l1 = float(stats["l1"])
-        l2 = math.sqrt(float(stats["l2sq"]))
-        phase_ms["stats"] = timer.lap_ms()
-        extra: dict[str, Any] = {}
+    def record(state: DataFrame, stats: dict[str, Any],
+               prev: dict[str, Any]) -> dict[str, Any]:
+        row: dict[str, Any] = {
+            "l1_diff": stats["l1"], "l2_diff": math.sqrt(stats["l2sq"]),
+            "dangling_mass": mass_of(prev),
+            "rank_sum": stats["mass_sum"], "edges_processed": graph.n_edges}
         if bins is not None:
             # A6 telemetry (for_test.h:51-85): per-bin mean |Δ| + count over
             # the reference's 1e-5 precision threshold
             diff = F.abs(F.col("rank") - F.col("prev_rank"))
-            extra["bin_convergence"] = {
+            row["bin_convergence"] = {
                 int(r["bin"]): {"mean_abs_diff": float(r["mean_diff"]),
                                 "unconverged": int(r["unconv"])}
-                for r in new_state.join(bins, "id").groupBy("bin").agg(
+                for r in state.join(bins, "id").groupBy("bin").agg(
                     F.avg(diff).alias("mean_diff"),
                     F.count(F.when(diff > 1e-5, 1)).alias("unconv"),
                 ).collect()
             }
-            phase_ms["telemetry"] = timer.lap_ms()
-        phase_ms = {k: round(v, 3) for k, v in phase_ms.items()}
-        ckpt.record(
-            it, new_state,
-            l1_diff=l1, l2_diff=l2, dangling_mass=mass,
-            rank_sum=float(stats["mass_sum"]),
-            edges_processed=graph.n_edges,
-            wall_ms=round(sum(phase_ms.values()), 3), phase_ms=phase_ms,
-            **extra,
-        )
-        if dangling_redistribution:
-            mass = float(stats["next_mass"] or 0.0)
-        # double-buffer swap (kernel_bblock.cu:1082): drop the previous
-        # superstep's checkpoint blocks NOW — leaving them cached was
-        # measured to degrade iteration wall time monotonically (block
-        # manager bloat), the DataFrame analogue of leaking device buffers.
-        state.unpersist()  # no-op for parquet-backed (dir mode) state
-        state = new_state
-        if tol is not None and (l2 if norm == "l2" else l1) <= tol:
-            converged = True
-            break
+        return row
+
+    def stop(stats: dict[str, Any], _prev: Any) -> bool:
+        if tol is None:
+            return False
+        return (math.sqrt(stats["l2sq"]) if norm == "l2" else stats["l1"]) <= tol
+
+    # fused A4 (L1) + A5 (L2) + A3 (next dangling mass) + conservation,
+    # collected as OBSERVED metrics of the materialization itself: the
+    # superstep is ONE Spark job (gather join + contribution agg + axpy
+    # + checkpoint write + stats), not a materialize job plus a second
+    # O(V) scan-aggregate — the DataFrame analogue of the reference
+    # fusing its convergence reduction into the same kernel stream
+    # (kernel_bblock.cu:1066-1072 runs on the buffers already on device).
+    run = fixpoint(
+        state, step,
+        [F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("l1"),
+         F.sum(F.pow(F.col("rank") - F.col("prev_rank"), 2)).alias("l2sq"),
+         F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("next_mass"),
+         F.sum("rank").alias("mass_sum")],
+        stop, max_iter, checkpointer=ckpt, start=start_iter,
+        stats={"next_mass": mass}, record=record)
 
     if use_salt:
         edges.unpersist()  # the salted O(E) copy is loop-local
@@ -360,5 +329,7 @@ def pagerank(
     # dir-backed: full on-disk history (earlier runs' iterations included
     # after a resume), else the in-memory rows of this invocation
     metrics = ckpt.load_metrics() if ckpt.dir else ckpt.metrics
-    return PageRankResult(ranks=state.select("id", "rank"), iterations=it,
-                          converged=converged, l1_diff=l1, metrics=metrics)
+    return PageRankResult(ranks=run.state.select("id", "rank"),
+                          iterations=run.rounds, converged=run.converged,
+                          l1_diff=float(run.stats.get("l1", math.inf)),
+                          metrics=metrics)

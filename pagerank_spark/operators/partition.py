@@ -50,6 +50,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 def balanced_partition(edges: DataFrame, k: int, rounds: int = 5,
                        slack: float = 1.05) -> DataFrame:
@@ -65,10 +67,7 @@ def balanced_partition(edges: DataFrame, k: int, rounds: int = 5,
         raise ValueError(f"rounds must be >= 0: {rounds}")
     if slack < 1.0:
         raise ValueError(f"slack must be >= 1.0: {slack}")
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
+    und = simple_edges(edges)
     adj = (und.select(F.col("a").alias("id"), F.col("b").alias("nb"))
            .unionByName(und.select(F.col("b").alias("id"),
                                    F.col("a").alias("nb")))
@@ -135,10 +134,7 @@ def partition_quality(edges: DataFrame, assign: DataFrame) -> DataFrame:
     """One-row quality summary ``(n_vertices, k_used, n_edges, cut_edges,
     cut_fraction, max_load, imbalance)`` of an assignment over the
     undirected simple graph — imbalance = max_load / (n/k_used)."""
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct().localCheckpoint(eager=True))
+    und = simple_edges(edges).localCheckpoint(eager=True)
     lab = assign.select("id", "partition")
     tagged = (und
               .join(lab.select(F.col("id").alias("a"),

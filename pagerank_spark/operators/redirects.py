@@ -33,8 +33,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import fixpoint, release
 
 
 @dataclass
@@ -83,15 +85,11 @@ def resolve_redirects(
         .localCheckpoint(eager=True)
     )
 
-    rounds = 0
-    budget = 1  # hops covered so far
-    while budget < max_hops:
-        rounds += 1
-        budget *= 2
+    def step(state: DataFrame, _prev) -> DataFrame:
         nxt = state.select(F.col("id").alias("_n_id"),
                            F.col("ptr").alias("_n_ptr"),
                            F.col("done").alias("_n_done"))
-        new_state = (
+        return (
             state.join(nxt, state["ptr"] == nxt["_n_id"], "left")
             .select(
                 "id",
@@ -101,17 +99,12 @@ def resolve_redirects(
                  | F.col("_n_done")).alias("done"),
             )
         )
-        obs = Observation(f"redirects_{rounds}")
-        new_state = new_state.observe(
-            obs, F.sum(F.when(~F.col("done"), 1).otherwise(0)).alias("open"))
-        new_state = new_state.localCheckpoint(eager=True)
-        open_n = int(obs.get["open"] or 0)
-        state.unpersist()
-        state = new_state
-        if open_n == 0:
-            break
 
-    r.unpersist()
-    out = state.select("id", F.col("ptr").alias("final_id"),
+    # round k covers 2^k hops: stop at the first round covering max_hops
+    run = fixpoint(state, step,
+                   [F.sum(F.when(~F.col("done"), 1).otherwise(0)).alias("open")],
+                   lambda stats, _: not stats["open"], (max_hops - 1).bit_length())
+    release(r)
+    out = run.state.select("id", F.col("ptr").alias("final_id"),
                        F.col("done").alias("resolved"))
-    return RedirectResult(targets=out, rounds=rounds)
+    return RedirectResult(targets=out, rounds=run.rounds)

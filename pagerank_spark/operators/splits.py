@@ -340,7 +340,8 @@ def unimax_budgets(df: DataFrame, strata_col: str, budget: float,
     ``weight_col`` sizes strata by its sum (e.g. token counts) instead of
     row counts. Returns ``(strata_col, n_s, budget_s, epochs_s)`` with
     budget_s/epochs_s rounded to 6 dp; Σ budget_s = budget when total
-    capacity allows, else every stratum caps (Σ = max_epochs * N).
+    capacity allows, else every stratum caps (Σ = max_epochs * N). Raises
+    ValueError if a stratum's ``weight_col`` sum is <= 0.
     """
     from pyspark.sql import Window
 
@@ -352,6 +353,13 @@ def unimax_budgets(df: DataFrame, strata_col: str, budget: float,
     w = (F.count(F.lit(1)) if weight_col is None
          else F.sum(F.col(weight_col)))
     counts = df.groupBy(strata_col).agg(w.cast("double").alias("n_s"))
+    if weight_col is not None:
+        # a stratum of weight <= 0 has no capacity: its epochs would be
+        # NaN/inf and it would sort to the front of the water-filling
+        bad = counts.filter(F.col("n_s") <= 0).limit(1).collect()
+        if bad:
+            raise ValueError(f"stratum {bad[0][strata_col]!r} has weight "
+                             f"sum {bad[0]['n_s']} (must be > 0)")
     win = Window.orderBy("n_s", strata_col)
     ranked = counts.select(
         strata_col, "n_s",

@@ -20,11 +20,11 @@ round is O(E_frontier), not O(E):
           frontier; fixpoint when no row improves.
 
 The improved-row count rides each round's materialization as an observed
-metric (one Spark job per round, the same discipline as the engine's other
-fixpoint loops). Scale shape: per round one join of the pinned O(E) edge
-table against the shrinking frontier plus one O(V) merge keyed on id; hub
-relaxations collapse map-side in the min-aggregate (min is the same
-partial-aggregable shape as the PageRank contribution sum, A2).
+metric (one Spark job per round, plans/fixpoint.py). Scale shape: per
+round one join of the pinned O(E) edge table against the shrinking
+frontier plus one O(V) merge keyed on id; hub relaxations collapse
+map-side in the min-aggregate (min is the same partial-aggregable shape
+as the PageRank contribution sum, A2).
 
 Determinism: each candidate is one add (parent dist + w) and min is
 order-independent, so results are bit-stable under any partitioning; with
@@ -37,8 +37,10 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import fixpoint, pin, release
 
 
 @dataclass
@@ -70,53 +72,43 @@ def shortest_paths(
          else F.lit(1.0))
     # pin (src, dst, w) once — cheapest parallel edge only — and validate
     # non-negativity on the same materialization (observed, no extra scan)
-    obs_w = Observation("sssp_weights")
-    ew = (
+    ew, got = pin(
         edges.select("src", "dst", w.alias("w"))
-        .groupBy("src", "dst").agg(F.min("w").alias("w"))
-        .observe(obs_w, F.min("w").alias("min_w"),
-                 F.count(F.when(~F.col("w").isNotNull() | F.isnan("w")
-                                | (F.abs("w") == float("inf")), 1)).alias("bad"))
-        .localCheckpoint(eager=True)
-    )
-    min_w, bad = obs_w.get["min_w"], int(obs_w.get["bad"] or 0)
+        .groupBy("src", "dst").agg(F.min("w").alias("w")),
+        F.min("w").alias("min_w"),
+        F.count(F.when(~F.col("w").isNotNull() | F.isnan("w")
+                       | (F.abs("w") == float("inf")), 1)).alias("bad"))
+    min_w, bad = got["min_w"], int(got["bad"] or 0)
     if bad or (min_w is not None and min_w < 0.0):
-        ew.unpersist()
+        release(ew)
         raise ValueError(
             f"shortest_paths requires finite non-negative weights "
             f"(min={min_w!r}, null/NaN rows={bad})")
 
-    dist = src_df.select("id", F.lit(0.0).alias("dist")) \
-                 .localCheckpoint(eager=True)
-    frontier = dist
-    rounds = 0
-    converged = False
-    for rounds in range(1, max_rounds + 1):
+    def step(state: DataFrame, _prev) -> DataFrame:
         cand = (
-            ew.join(frontier.select(F.col("id").alias("src"), "dist"), "src")
+            ew.join(state.filter("improved")
+                    .select(F.col("id").alias("src"), "dist"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
         )
-        obs = Observation(f"sssp_round_{rounds}")
-        merged = (
-            dist.join(cand, "id", "full")
+        return (
+            state.select("id", "dist").join(cand, "id", "full")
             .select(
                 "id",
                 F.least(F.col("dist"), F.col("cand")).alias("dist"),
                 (F.col("dist").isNull()
                  | (F.col("cand") < F.col("dist"))).alias("improved"),
             )
-            .observe(obs, F.sum(F.col("improved").cast("long")).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        n_improved = int(obs.get["n"] or 0)
-        new_dist = merged.select("id", "dist")
-        new_frontier = merged.filter("improved").select("id", "dist")
-        dist.unpersist()
-        dist, frontier = new_dist, new_frontier
-        if n_improved == 0:
-            converged = True
-            rounds -= 1
-            break
-    ew.unpersist()
-    return SsspResult(distances=dist, rounds=rounds, converged=converged)
+
+    # the state is (id, dist, improved): the improved rows are the frontier
+    state = src_df.select("id", F.lit(0.0).alias("dist"),
+                          F.lit(True).alias("improved")).localCheckpoint(eager=True)
+    run = fixpoint(state, step, [F.sum(F.col("improved").cast("long")).alias("n")],
+                   lambda stats, _: not stats["n"], max_rounds)
+    release(ew)
+    # the round that improved nothing only confirmed the fixpoint
+    rounds = run.rounds - 1 if run.converged else run.rounds
+    return SsspResult(distances=run.state.select("id", "dist"), rounds=rounds,
+                      converged=run.converged)

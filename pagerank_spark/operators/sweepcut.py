@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pagerank_spark.operators.graph import LinkGraph
+from pagerank_spark.operators.graph import LinkGraph, simple_edges
 
 # prefix ranks are row_numbers >= 1; this stands in for "endpoint not in
 # the support" so least/greatest fold NULLs away without special cases
@@ -62,11 +62,7 @@ def sweep_cut(graph: LinkGraph, scores: DataFrame,
     volume.
     """
     p = F.col(score_col)
-    und = (graph.edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint(eager=False))
+    und = simple_edges(graph.edges).localCheckpoint(eager=False)
     deg = (und.select(F.col("a").alias("id"))
            .unionByName(und.select(F.col("b").alias("id")))
            .groupBy("id").agg(F.count(F.lit(1)).alias("d")))

@@ -443,7 +443,7 @@ def kn_perplexity(docs: DataFrame, target: DataFrame | None = None,
 
     ``target=None`` trains on ``docs`` itself. Returns
     ``(id, n_bigrams, ppl)`` with ppl = 2^(-mean log2 p), 0.0 for docs
-    under two tokens.
+    under two tokens. Raises ValueError if ``target`` has no bigrams.
 
     Scale shape: the LM is three vocab-bounded aggregates of the TARGET
     bigram table (map-side combinable: c(v,w); per-context totals + types;
@@ -465,6 +465,11 @@ def kn_perplexity(docs: DataFrame, target: DataFrame | None = None,
     cont = lm.groupBy("cur").agg(F.count(F.lit(1)).alias("n1p_back"))
     totals = lm.agg(F.count(F.lit(1)).alias("bigram_types"),
                     F.countDistinct("cur").alias("cont_types")).collect()[0]
+    if target is not None and not totals["bigram_types"]:
+        # an empty LM would give every bigram p_cont = 1, i.e. ppl = 1.0:
+        # a "perfect" score for every document (self-trained, no doc has
+        # bigrams and all get the 0.0 sentinel)
+        raise ValueError("kn_perplexity: the target corpus has no bigrams")
     denom = float(totals["bigram_types"] + totals["cont_types"] + 1)
 
     # self-trained call: the scoring bigram table IS the training one —

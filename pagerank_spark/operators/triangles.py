@@ -22,13 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
+
 
 def _oriented(edges: DataFrame, order_by_degree: bool) -> DataFrame:
-    simple = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    simple = simple_edges(edges)
     if not order_by_degree:
         return simple
     # orient from lower-(degree, id) to higher-(degree, id): bounds the
@@ -92,11 +90,7 @@ def local_clustering_coefficient(edges: DataFrame,
     degrees from the canonical simple edge set — one extra groupBy over
     O(E), joined V-to-V with the triangle counts.
     """
-    simple = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+    simple = simple_edges(edges)
     deg = (
         simple.select(F.col("a").alias("id"))
         .unionAll(simple.select(F.col("b").alias("id")))

@@ -11,7 +11,7 @@ Formulation: per round, edge support comes from the degree-oriented
 triangle enumeration of ``triangles.py`` (each triangle surfaces once; its
 three edges get +1 via an explode + hash aggregate — the A2 shuffle shape
 with map-side partials), then edges with support < k-2 are dropped and the
-round repeats on the survivors. The dropped-edge count rides each round's
+round repeats on the survivors. The surviving edge count rides each round's
 materialization as an observed metric, so one round is exactly the
 jobs of a triangle count plus one filter. Rounds are bounded by the peel
 depth (small on web graphs); each round's work is the Schank-Wagner
@@ -23,19 +23,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.graph import simple_edges
 from pagerank_spark.operators.triangles import _oriented
-
-
-def _simple(edges: DataFrame) -> DataFrame:
-    return (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"))
-        .distinct()
-    )
+from pagerank_spark.plans.fixpoint import fixpoint, pin, release
 
 
 def _support_of(s: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -72,7 +65,7 @@ def _support_of(s: DataFrame) -> tuple[DataFrame, DataFrame]:
 def edge_support(edges: DataFrame) -> DataFrame:
     """(a, b, support) per undirected simple edge (a < b): the number of
     triangles the edge participates in. Edges in no triangle get 0."""
-    sup, _ = _support_of(_simple(edges).localCheckpoint(eager=True))
+    sup, _ = _support_of(simple_edges(edges).localCheckpoint(eager=True))
     return sup
 
 
@@ -88,23 +81,20 @@ def k_truss(edges: DataFrame, k: int, max_rounds: int = 100) -> TrussResult:
     WITHIN the surviving subgraph (peel to fixpoint)."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    cur = _simple(edges).localCheckpoint(eager=True)
-    rounds, converged = 0, False
-    for rounds in range(1, max_rounds + 1):
+    pins: list[DataFrame] = []
+
+    def step(cur: DataFrame, _prev) -> DataFrame:
+        while pins:  # the previous round is materialized: drop its copy
+            release(pins.pop())
         sup, oriented = _support_of(cur)
-        obs = Observation(f"ktruss_{rounds}")
-        nxt = (
-            sup.observe(obs, F.sum((F.col("support") < k - 2).cast("long"))
-                        .alias("dropped"))
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        dropped = int(obs.get["dropped"] or 0)
-        oriented.unpersist()
-        cur.unpersist()
-        cur = nxt
-        if dropped == 0:
-            converged = True
-            break
-    return TrussResult(edges=cur, rounds=rounds, converged=converged)
+        pins.append(oriented)
+        return sup.filter(F.col("support") >= k - 2).select("a", "b")
+
+    # an edge is dropped iff the surviving edge count falls
+    count = [F.count(F.lit(1)).alias("n_edges")]
+    cur, n_edges = pin(simple_edges(edges), *count)
+    run = fixpoint(cur, step, count, lambda stats, prev: stats == prev,
+                   max_rounds, stats=n_edges)
+    for oriented in pins:
+        release(oriented)
+    return TrussResult(edges=run.state, rounds=run.rounds, converged=run.converged)

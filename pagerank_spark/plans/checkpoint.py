@@ -15,6 +15,10 @@ Two modes:
   parquet's atomic ``_SUCCESS`` marker as the commit point, plus a metrics
   row appended to ``<dir>/metrics`` recording iteration, L1 diff, dangling
   mass, wall ms, and per-partition row counts (the partition lineage).
+
+In both modes ``save()`` is the one materialization of a round: the round
+loop (plans/fixpoint.py) observes its convergence scalars on that same
+job, and a dir-backed round is read back from the parquet it just wrote.
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import warnings
 from typing import Any
 
@@ -141,15 +144,3 @@ class SuperstepCheckpointer:
                 return [json.loads(line) for line in f if line.strip()]
         return self.metrics
 
-
-class StageTimer:
-    """Reference timing sink S5 (sdkTimers, kernel_bblock.cu:884-886)."""
-
-    def __init__(self) -> None:
-        self.t0 = time.monotonic()
-
-    def lap_ms(self) -> float:
-        now = time.monotonic()
-        ms = (now - self.t0) * 1000.0
-        self.t0 = now
-        return ms

@@ -344,3 +344,9 @@ def test_unimax_weight_col_and_validation(spark):
         unimax_budgets(df, "lang", budget=0.0)
     with pytest.raises(ValueError):
         unimax_budgets(df, "lang", budget=1.0, max_epochs=0.0)
+    # a stratum with no weight (zero or negative sum) has no capacity
+    for toks in (0.0, -3.0):
+        bad = spark.createDataFrame([("a", 5.0), ("c", toks)],
+                                    "lang string, toks double")
+        with pytest.raises(ValueError, match="'c'"):
+            unimax_budgets(bad, "lang", budget=10.0, weight_col="toks")

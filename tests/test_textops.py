@@ -641,3 +641,13 @@ def test_sb_perplexity_empty_target_backs_off_everywhere(spark):
     # every score = 0.4 * (0+1)/1 = 0.4 -> ppl = 1/0.4 = 2.5
     assert got[0] == (2, 2.5)
     assert got[1] == (0, 0.0)
+
+
+def test_kn_perplexity_empty_target_raises(spark):
+    # an empty LM would score every doc ppl=1.0, a "perfect" score
+    from pagerank_spark.operators.textops import kn_perplexity
+    raw = spark.createDataFrame([(0, "a b c"), (1, "")],
+                                "doc_id long, text string")
+    for tgt in (raw.filter("doc_id < 0"), raw.filter("doc_id = 1")):
+        with pytest.raises(ValueError, match="no bigrams"):
+            kn_perplexity(raw, target=tgt)
