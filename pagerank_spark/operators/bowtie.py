@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.bfs import bfs_hops
 from pagerank_spark.operators.scc import strongly_connected_components
+from pagerank_spark.plans.fixpoint import release
 
 # region tags, also the membership priority (lower wins in the final pick)
 CORE, IN, OUT, FWD_OF_IN, BWD_OF_OUT = 0, 1, 2, 3, 4
@@ -120,10 +121,12 @@ def bowtie_decomposition(
         .when(F.col("mp").isNotNull(), "TENDRIL")
         .otherwise("DISCONNECTED")
     )
+    # pinned so the frames it is read from can be freed
     regions = (verts.join(picked, "id", "left")
-               .select("id", region.alias("region")))
+               .select("id", region.alias("region"))
+               .localCheckpoint(eager=True))
     for df in (labels, core, out_set, in_set):
-        df.unpersist()
+        release(df)
     return BowtieResult(regions=regions, core_label=core_label,
                         core_size=core_size, converged=converged)
 

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.fixpoint import release
+
 
 @dataclass
 class HitsResult:
@@ -91,7 +93,7 @@ def _power_scores(ew: DataFrame, vertices: DataFrame, iterations: int,
         )
         auth, new_auth_raw = _l1_normalized(gathered, "authority")
         if auth_raw is not None:
-            auth_raw.unpersist()
+            release(auth_raw)
         auth_raw = new_auth_raw
         # hub gather: against edge direction (per-src sum over dst auths)
         gathered = (
@@ -101,7 +103,7 @@ def _power_scores(ew: DataFrame, vertices: DataFrame, iterations: int,
         )
         hub, new_hub_raw = _l1_normalized(gathered, "hub")
         if hub_raw is not None:
-            hub_raw.unpersist()
+            release(hub_raw)
         hub_raw = new_hub_raw
 
     return (

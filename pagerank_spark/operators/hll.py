@@ -41,7 +41,7 @@ HASH_BITS = 60  # shared_hash60 yields a uniform non-negative 60-bit int
 
 
 def _alpha(m: int) -> float:
-    # neighborhood.py:117 constants (Flajolet et al. Fig. 3)
+    """HLL bias-correction constant for m registers (Flajolet et al. Fig. 3)."""
     if m <= 16:
         return 0.673
     if m == 32:

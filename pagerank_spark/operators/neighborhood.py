@@ -1,4 +1,5 @@
-"""Neighborhood function, effective diameter, and mean distance.
+"""Neighborhood function, effective diameter, mean distance, and the
+harmonic and closeness centralities built on the same ball growth.
 
 Absent from the reference (it computes PageRank only; SURVEY.md §2.9) but a
 canonical link-graph analytic: N(t) = #{(u,v) : dist(u,v) <= t} counted
@@ -6,19 +7,29 @@ over directed paths, from which the effective diameter (smallest t with
 N(t) >= alpha * N(inf), Boldi-Vigna-style interpolated) and the mean
 finite-pair distance follow.
 
-Two implementations sharing one superstep shape (ball(v, t+1) =
-ball(v, t) ∪ ⋃_{(v,w)∈E} ball(w, t)):
+Every function here grows the balls ball(v, t+1) = ball(v, t) ∪
+⋃_{(v,w)∈E} ball(w, t) hop by hop, one round of ``plans.fixpoint`` per
+hop, in one of two loops:
 
-* ``neighborhood_function_exact`` — balls as an explicit (id, r) pair
-  table; one join + unionAll + distinct per hop. O(V·V) state worst case:
-  the small-scale truth used by tests and the DuckDB oracle query.
-* ``neighborhood_function_hll`` — HyperANF (Boldi, Rosa, Vigna, "HyperANF:
-  approximating the neighbourhood function of very large graphs on a
-  budget", WWW 2011): each vertex carries a HyperLogLog sketch of its
-  ball, a fixed array of m = 2^b byte-sized registers; the hop union
-  becomes an elementwise register max. State is O(V·m) and each hop is one
+* ``_first_reach`` — exact. The state is one table (id, r, t): r was first
+  reached from id at hop t. A hop joins the edges against the last hop's
+  rows only (a pair first reached at hop t+1 comes from a pair first
+  reached at hop t) and folds the new pairs into the table with one
+  (id, r)-keyed min(t) aggregate, which drops repeats and keeps each
+  pair's first hop. The row count is N(t); the loop stops when it does
+  not move. O(V·V) state worst case: the small-scale truth used by tests
+  and the DuckDB oracle queries. ``neighborhood_function_exact``
+  reads the counts, ``harmonic_centrality_exact`` sums lcm/t per id and
+  ``closeness_centrality_exact`` counts and sums t per id.
+* ``_hyperanf`` — HyperANF (Boldi, Rosa, Vigna, "HyperANF: approximating
+  the neighbourhood function of very large graphs on a budget", WWW
+  2011): each vertex carries a HyperLogLog sketch of its ball, a fixed
+  array of m = 2^b byte-sized registers, and the hop union becomes an
+  elementwise register max. State is O(V·m) and each hop is one
   edges⋈sketches join + per-register max aggregate — the J1/A2 shuffle
-  shape the engine already optimizes, so this is the 10^12-edge path.
+  shape the engine already optimizes, so this is the 10^12-edge path. The
+  three ``_hll`` functions differ only in the running per-vertex columns
+  they carry and how each one grows from the hop's ball growth.
 
 HLL details (all JVM-side, no Python in the loop):
   register index j = low b bits of xxhash64(id); rho = (#trailing zeros of
@@ -35,7 +46,10 @@ HLL details (all JVM-side, no Python in the loop):
   join + one aggregate with the sketch table referenced exactly once (no
   merge-back outer join — which also sidesteps a Spark 4.1 analyzer bug
   that mis-binds a pushed join-key filter when the sketch relation
-  appears twice under USING-join dedup).
+  appears twice under USING-join dedup). The running columns ride the
+  same self-loop row and are picked out of the aggregate with a keyed
+  MAX; all per-vertex arithmetic is per-row, so results are deterministic
+  across partitionings.
 
 Scale note: the sketch join moves O(E·m) bytes per hop — b trades accuracy
 (rel. std. err. ~1.04/sqrt(2^b)) against shuffle volume. The per-register
@@ -46,17 +60,47 @@ profile as the PageRank contribution aggregate (AQE skew handling applies).
 
 from __future__ import annotations
 
+import itertools
 import math
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pagerank_spark.operators.hll import _alpha
+from pagerank_spark.plans.fixpoint import Stats, fixpoint, pin, release
 
 
 @dataclass
 class NeighborhoodResult:
     nf: DataFrame          # (t int, n_pairs) — cumulative pairs within t hops
     counts: list[float]    # counts[t] = N(t), t = 0..rounds
+    rounds: int
+    converged: bool
+
+
+@dataclass
+class HarmonicResult:
+    scores: DataFrame      # exact: (id, hc_num long, hc double); hll: (id, hc double)
+    rounds: int
+    converged: bool
+
+
+@dataclass
+class ClosenessResult:
+    # exact: (id, n_reached long, dist_sum long, closeness double)
+    # hll:   (id, n_reached_est, dist_sum_est, closeness double)
+    scores: DataFrame
+    rounds: int
+    converged: bool
+
+
+@dataclass
+class _Growth:
+    state: DataFrame       # the final ball table (pinned)
+    counts: list[float]    # counts[t] = N(t), t = 0..rounds
+    n_vertices: int
     rounds: int
     converged: bool
 
@@ -74,54 +118,60 @@ def _verts(e: DataFrame, universe: DataFrame | None) -> DataFrame:
     return members.distinct()
 
 
-def neighborhood_function_exact(
-    edges: DataFrame,
-    max_t: int = 32,
-    universe: DataFrame | None = None,
-) -> NeighborhoodResult:
-    """Exact N(t) by materializing every ball as (id, r) pairs.
-
-    Truth oracle for the HLL path; usable directly where V is small enough
-    that reachable-pair state (<= V^2 rows) is acceptable."""
-    spark = edges.sparkSession
-    e = _simple(edges).localCheckpoint(eager=True)
-    verts = _verts(e, universe)
-
-    reach = verts.select("id", F.col("id").alias("r")) \
-                 .localCheckpoint(eager=True)
-    counts = [float(reach.count())]
-    rounds, converged = 0, False
-    for rounds in range(1, max_t + 1):
-        grown = e.join(reach.select(F.col("id").alias("dst"), "r"), "dst") \
-                 .select(F.col("src").alias("id"), "r")
-        obs = Observation(f"nf_exact_{rounds}")
-        nxt = (reach.unionAll(grown).distinct()
-               .observe(obs, F.count(F.lit(1)).alias("n"))
-               .localCheckpoint(eager=True))
-        n = float(obs.get["n"])
-        reach.unpersist()
-        reach = nxt
-        counts.append(n)
-        if n == counts[-2]:
-            converged = True
-            counts.pop()          # last hop added nothing; N already flat
-            rounds -= 1
-            break
-    reach.unpersist()
-    nf = spark.createDataFrame(
-        [(t, int(n)) for t, n in enumerate(counts)], "t int, n_pairs long")
-    return NeighborhoodResult(nf=nf, counts=counts,
-                              rounds=rounds, converged=converged)
+def _directed(edges: DataFrame, direction: str) -> DataFrame:
+    """Ball direction: 'in' computes hc(v) = Σ 1/d(u,v) (classic harmonic
+    centrality — balls grow over reversed edges); 'out' uses d(v,u)."""
+    e = _simple(edges)
+    if direction == "in":
+        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    if direction == "out":
+        return e
+    raise ValueError(f"direction must be 'in' or 'out', got {direction!r}")
 
 
-def _alpha(m: int) -> float:
-    if m <= 16:
-        return 0.673
-    if m == 32:
-        return 0.697
-    if m == 64:
-        return 0.709
-    return 0.7213 / (1.0 + 1.079 / m)
+def _grow(state: DataFrame, stats: Stats, n_vertices: int,
+          step: Callable[[DataFrame, Stats], DataFrame], metrics: list[Column],
+          max_t: int, saturated: Callable[[Stats, Stats], bool],
+          plateau: Callable[[Stats, Stats], bool] | None = None) -> _Growth:
+    """Run the hops of either loop; ``metrics`` observe the ball-size sum
+    ``n`` each hop. A saturated hop moved nothing, so it is not counted:
+    N(t) was already flat at the hop before."""
+    counts, flat = [float(stats["n"])], []
+
+    def stop(stats: Stats, prev: Stats) -> bool:
+        if saturated(stats, prev):
+            flat.append(True)
+            return True
+        counts.append(float(stats["n"]))
+        return plateau is not None and plateau(stats, prev)
+
+    run = fixpoint(state, step, metrics, stop, max_t, stats=stats)
+    return _Growth(state=run.state, counts=counts, n_vertices=n_vertices,
+                   rounds=run.rounds - len(flat), converged=run.converged)
+
+
+def _first_reach(edges: DataFrame, direction: str, max_t: int,
+                 universe: DataFrame | None) -> _Growth:
+    """Exact balls as the first-reach table (id, r, t), grown to a
+    fixpoint or ``max_t`` hops."""
+    e = _directed(edges, direction).localCheckpoint(eager=True)
+    size = [F.count(F.lit(1)).alias("n"), F.max("t").alias("t")]
+    reach, stats = pin(
+        _verts(e, universe).select("id", F.col("id").alias("r"),
+                                   F.lit(0).alias("t")), *size)
+
+    def step(reach: DataFrame, prev: Stats) -> DataFrame:
+        frontier = reach.filter(F.col("t") == F.lit(prev["t"])).select(
+            F.col("id").alias("dst"), "r", (F.col("t") + 1).alias("t"))
+        hop = e.join(frontier, "dst").select(F.col("src").alias("id"), "r", "t")
+        # one aggregate both drops repeats and keeps each pair's first hop
+        return (reach.unionAll(hop).groupBy("id", "r")
+                .agg(F.min("t").alias("t")))
+
+    grown = _grow(reach, stats, stats["n"], step, size, max_t,
+                  lambda stats, prev: stats["n"] == prev["n"])
+    release(e)
+    return grown
 
 
 def _estimate_expr(m: int):
@@ -139,20 +189,23 @@ def _estimate_expr(m: int):
     return F.when((raw <= F.lit(2.5 * m)) & (v0 > 0), lin).otherwise(raw)
 
 
-def neighborhood_function_hll(
-    edges: DataFrame,
-    max_t: int = 64,
-    b: int = 6,
-    universe: DataFrame | None = None,
-    rel_tol: float = 1e-4,
-) -> NeighborhoodResult:
-    """HyperANF: approximate N(t) with per-vertex HyperLogLog ball
-    sketches of m = 2^b registers (rel. std. err. ~1.04/sqrt(m))."""
+# running per-vertex column -> its next value from (itself, the hop's
+# non-negative ball growth, the hop number)
+Carry = dict[str, Callable[[Column, Column, int], Column]]
+
+
+def _hyperanf(edges: DataFrame, direction: str, max_t: int, b: int,
+              universe: DataFrame | None, rel_tol: float,
+              carry: Carry | None = None) -> _Growth:
+    """HyperANF ball sketches (id, regs, pest, *carry) grown to register
+    saturation, an N(t) plateau within ``rel_tol``, or ``max_t`` hops;
+    ``pest`` is the vertex's ball-size estimate, every carried column
+    starts at 0.0."""
     if not 4 <= b <= 10:
         raise ValueError(f"b must be in [4, 10], got {b}")
     m = 1 << b
-    spark = edges.sparkSession
-    e = _simple(edges)
+    carry = carry or {}
+    e = _directed(edges, direction)
     verts = _verts(e, universe)
     # Self-loops fold each vertex's own ball into the same gather join:
     # ball(v,t+1) = ⋃_{w ∈ N+(v) ∪ {v}} ball(w,t). One join + one aggregate
@@ -169,75 +222,91 @@ def neighborhood_function_hll(
     j = h.bitwiseAND(m - 1).cast("int")
     # plain m-element array (no transform lambda — see NB above): register
     # j gets rho, the rest 0
-    sk = verts.select(
-        "id",
-        F.array(*[F.when(F.lit(i) == j, rho).otherwise(0).cast("tinyint")
-                  for i in range(m)]).alias("regs"),
-    ).localCheckpoint(eager=True)
+    regs = F.array(*[F.when(F.lit(i) == j, rho).otherwise(0).cast("tinyint")
+                     for i in range(m)])
+    est = _estimate_expr(m)
+    sketch = [
+        # the per-vertex estimate is deterministic (fixed in-array fold
+        # order); summing through DECIMAL keeps the total independent of
+        # partition / combine order, so repeated runs agree bit-for-bit
+        F.sum(F.col("pest").cast("decimal(30,8)")).alias("n"),
+        F.sum(F.aggregate(F.col("regs"), F.lit(0).cast("long"),
+                          lambda acc, x: acc + x)).alias("rsum"),
+        F.count(F.lit(1)).alias("v"),
+    ]
+    sk, stats = pin(
+        verts.select("id", regs.alias("regs"))
+        .select("id", "regs", est.alias("pest"),
+                *[F.lit(0.0).alias(c) for c in carry]), *sketch)
 
-    # the per-vertex estimate is deterministic (fixed in-array fold order);
-    # summing through DECIMAL keeps the total independent of partition /
-    # combine order, so repeated runs agree bit-for-bit
-    est = _estimate_expr(m).cast("decimal(30,8)")
-    # register sum is a monotone non-decreasing integer; equal consecutive
-    # sums <=> no register moved anywhere <=> exact fixpoint
-    reg_sum = F.sum(F.aggregate(F.col("regs"), F.lit(0).cast("long"),
-                                lambda acc, x: acc + x)).alias("rsum")
-    first = sk.select(F.sum(est).alias("n"), reg_sum).first()
-    counts = [float(first["n"])]
-    prev_rsum = int(first["rsum"])
-    rounds, converged = 0, False
-    for rounds in range(1, max_t + 1):
-        obs = Observation(f"nf_hll_{rounds}")
-        nxt = (
-            e2.join(sk.select(F.col("id").alias("dst"), "regs"), "dst")
+    hops = itertools.count(1)
+    self_row = F.col("dst") == F.col("src")
+    running = ["pest", *carry]
+
+    def step(sk: DataFrame, _prev: Stats) -> DataFrame:
+        hop = next(hops)
+        # in the last select, est is the grown ball and pest the old one
+        grow = F.greatest(est - F.col("pest"), F.lit(0.0))
+        return (
+            e2.join(sk.select(F.col("id").alias("dst"), "regs", *running),
+                    "dst")
             .groupBy(F.col("src").alias("id"))
-            .agg(*[F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)])
+            .agg(*[F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)],
+                 *[F.max(F.when(self_row, F.col(c))).alias(c) for c in running])
             .select("id", F.array(*[F.col(f"_r{i}") for i in range(m)])
-                    .alias("regs"))
-            .observe(obs, F.sum(est).alias("n"), reg_sum)
-            .localCheckpoint(eager=True)
+                    .alias("regs"), *running)
+            .select("id", "regs", est.alias("pest"),
+                    *[nxt(F.col(c), grow, hop).alias(c)
+                      for c, nxt in carry.items()])
         )
-        got = obs.get
-        sk.unpersist()
-        sk = nxt
-        counts.append(float(got["n"]))
-        rsum = int(got["rsum"])
-        if rsum == prev_rsum:
-            converged = True            # register saturation: exact fixpoint
-            counts.pop()
-            rounds -= 1
-            break
-        prev_rsum = rsum
+
+    def plateau(stats: Stats, prev: Stats) -> bool:
         # registers are monotone, so a NEGATIVE delta is estimator noise
         # (the linear-counting -> raw-estimator crossover can dip), not
         # saturation — require the delta to be non-negative AND small
-        if 0.0 <= counts[-1] - counts[-2] <= rel_tol * counts[-1]:
-            converged = True
-            break
-    sk.unpersist()
-    nf = spark.createDataFrame(
-        [(t, n) for t, n in enumerate(counts)], "t int, n_pairs double")
-    return NeighborhoodResult(nf=nf, counts=counts,
-                              rounds=rounds, converged=converged)
+        n = float(stats["n"])
+        return 0.0 <= n - float(prev["n"]) <= rel_tol * n
+
+    grown = _grow(sk, stats, stats["v"], step, sketch, max_t,
+                  lambda stats, prev: stats["rsum"] == prev["rsum"], plateau)
+    release(e2)
+    return grown
 
 
-@dataclass
-class HarmonicResult:
-    scores: DataFrame      # exact: (id, hc_num long, hc double); hll: (id, hc double)
-    rounds: int
-    converged: bool
+def _nf_result(grown: _Growth, n_pairs: str) -> NeighborhoodResult:
+    """``n_pairs``: 'long' for exact counts, 'double' for estimates."""
+    release(grown.state)
+    cast = int if n_pairs == "long" else float
+    nf = grown.state.sparkSession.createDataFrame(
+        [(t, cast(n)) for t, n in enumerate(grown.counts)],
+        f"t int, n_pairs {n_pairs}")
+    return NeighborhoodResult(nf=nf, counts=grown.counts,
+                              rounds=grown.rounds, converged=grown.converged)
 
 
-def _directed(edges: DataFrame, direction: str) -> DataFrame:
-    """Ball direction: 'in' computes hc(v) = Σ 1/d(u,v) (classic harmonic
-    centrality — balls grow over reversed edges); 'out' uses d(v,u)."""
-    e = _simple(edges)
-    if direction == "in":
-        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    if direction == "out":
-        return e
-    raise ValueError(f"direction must be 'in' or 'out', got {direction!r}")
+def neighborhood_function_exact(
+    edges: DataFrame,
+    max_t: int = 32,
+    universe: DataFrame | None = None,
+) -> NeighborhoodResult:
+    """Exact N(t) by materializing every ball as first-reach pairs.
+
+    Truth oracle for the HLL path; usable directly where V is small enough
+    that reachable-pair state (<= V^2 rows) is acceptable."""
+    return _nf_result(_first_reach(edges, "out", max_t, universe), "long")
+
+
+def neighborhood_function_hll(
+    edges: DataFrame,
+    max_t: int = 64,
+    b: int = 6,
+    universe: DataFrame | None = None,
+    rel_tol: float = 1e-4,
+) -> NeighborhoodResult:
+    """HyperANF: approximate N(t) with per-vertex HyperLogLog ball
+    sketches of m = 2^b registers (rel. std. err. ~1.04/sqrt(m))."""
+    return _nf_result(
+        _hyperanf(edges, "out", max_t, b, universe, rel_tol), "double")
 
 
 def harmonic_centrality_exact(
@@ -255,57 +324,36 @@ def harmonic_centrality_exact(
         raise ValueError("exact mode supports 1 <= max_t <= 25 "
                          "(lcm-scaled integer weights)")
     lcm = math.lcm(*range(1, max_t + 1))
-    e = _directed(edges, direction).localCheckpoint(eager=True)
-    verts = _verts(e, universe).localCheckpoint(eager=True)
-
-    reach = verts.select("id", F.col("id").alias("r")) \
-                 .localCheckpoint(eager=True)
-    fresh_counts = []          # per-round (id, s) contributions, kept cached
-    keep = []
-    rounds, converged = 0, False
-    for rounds in range(1, max_t + 1):
-        grown = (e.join(reach.select(F.col("id").alias("dst"), "r"), "dst")
-                 .select(F.col("src").alias("id"), "r").distinct())
-        obs = Observation(f"hc_exact_{rounds}")
-        fresh = (grown.join(reach, ["id", "r"], "left_anti")
-                 .observe(obs, F.count(F.lit(1)).alias("n"))
-                 .localCheckpoint(eager=True))
-        if int(obs.get["n"] or 0) == 0:
-            fresh.unpersist()
-            rounds -= 1
-            converged = True
-            break
-        keep.append(fresh)
-        fresh_counts.append(
-            fresh.groupBy("id")
-            .agg((F.count(F.lit(1)) * F.lit(lcm // rounds)).alias("s")))
-        nxt = reach.unionAll(fresh).localCheckpoint(eager=True)
-        reach.unpersist()
-        reach = nxt
-    if fresh_counts:
-        allc = fresh_counts[0]
-        for fc in fresh_counts[1:]:
-            allc = allc.unionAll(fc)
-        sums = allc.groupBy("id").agg(F.sum("s").alias("hc_num"))
-    else:
-        sums = verts.sparkSession.createDataFrame([], "id long, hc_num long")
-    scores = (verts.join(sums, "id", "left")
-              .select("id",
-                      F.coalesce("hc_num", F.lit(0)).alias("hc_num"))
-              .withColumn("hc", F.col("hc_num") / F.lit(float(lcm)))
-              .localCheckpoint(eager=True))
-    reach.unpersist()
-    for df in keep:
-        df.unpersist()
-    return HarmonicResult(scores=scores, rounds=rounds, converged=converged)
+    grown = _first_reach(edges, direction, max_t, universe)
+    hc_num = F.sum(F.when(F.col("t") > 0, F.expr(f"{lcm} div t"))
+                   .otherwise(0))
+    scores = (grown.state.groupBy("id").agg(hc_num.alias("hc_num"))
+              .withColumn("hc", F.col("hc_num") / F.lit(float(lcm))))
+    return HarmonicResult(scores=scores, rounds=grown.rounds,
+                          converged=grown.converged)
 
 
-@dataclass
-class ClosenessResult:
-    # (id, n_reached long, dist_sum long, closeness double)
-    scores: DataFrame
-    rounds: int
-    converged: bool
+def harmonic_centrality_hll(
+    edges: DataFrame,
+    max_t: int = 64,
+    b: int = 6,
+    universe: DataFrame | None = None,
+    direction: str = "in",
+    rel_tol: float = 1e-4,
+) -> HarmonicResult:
+    """HyperANF-style harmonic centrality (Boldi-Vigna, "Axioms for
+    centrality", Internet Math. 2014): hc(v) ≈ Σ_t (|B(v,t)|-|B(v,t-1)|)/t
+    with ball sizes from the per-vertex HLL sketches."""
+    grown = _hyperanf(edges, direction, max_t, b, universe, rel_tol, carry={
+        "hc": lambda hc, grow, hop: hc + grow / F.lit(float(hop))})
+    return HarmonicResult(scores=grown.state.select("id", "hc"),
+                          rounds=grown.rounds, converged=grown.converged)
+
+
+def _closeness(nr: Column, ds: Column, n_vertices: int) -> Column:
+    """Wasserman-Faust (n/(N−1))·(n/dist_sum), 0 for an unreached vertex."""
+    return F.when(ds > 0, (nr / F.lit(float(n_vertices - 1))) * (nr / ds)) \
+            .otherwise(F.lit(0.0))
 
 
 def closeness_centrality_exact(
@@ -319,150 +367,22 @@ def closeness_centrality_exact(
     form that stays comparable across disconnected components (Wasserman &
     Faust 1994; the convention NetworkX ships as ``closeness_centrality``).
 
-    Same truncated-BFS growth as ``harmonic_centrality_exact`` (per hop:
-    one gather join + anti-join against the reached set — the J1 shuffle
-    shape), but the per-round first-reach counts accumulate the two
-    EXACT integers (#reached, Σ distance) and the single double division
-    happens once per vertex at the end, so the result value-hash matches
-    any engine computing the same expression. ``direction='in'`` grows
-    balls over reversed edges (who can reach v — the classic centrality);
-    ``'out'`` measures v's reach."""
-    e = _directed(edges, direction).localCheckpoint(eager=True)
-    verts = _verts(e, universe).localCheckpoint(eager=True)
-    n_minus_1 = float(verts.count() - 1)
-
-    reach = verts.select("id", F.col("id").alias("r")) \
-                 .localCheckpoint(eager=True)
-    fresh_counts = []          # per-round (id, cnt, t*cnt) contributions
-    keep = []
-    rounds, converged = 0, False
-    for rounds in range(1, max_t + 1):
-        grown = (e.join(reach.select(F.col("id").alias("dst"), "r"), "dst")
-                 .select(F.col("src").alias("id"), "r").distinct())
-        obs = Observation(f"cc_exact_{rounds}")
-        fresh = (grown.join(reach, ["id", "r"], "left_anti")
-                 .observe(obs, F.count(F.lit(1)).alias("n"))
-                 .localCheckpoint(eager=True))
-        if int(obs.get["n"] or 0) == 0:
-            fresh.unpersist()
-            rounds -= 1
-            converged = True
-            break
-        keep.append(fresh)
-        cnt = F.count(F.lit(1))
-        fresh_counts.append(
-            fresh.groupBy("id").agg(cnt.alias("c"),
-                                    (cnt * F.lit(rounds)).alias("d")))
-        nxt = reach.unionAll(fresh).localCheckpoint(eager=True)
-        reach.unpersist()
-        reach = nxt
-    spark = verts.sparkSession
-    if fresh_counts:
-        allc = fresh_counts[0]
-        for fc in fresh_counts[1:]:
-            allc = allc.unionAll(fc)
-        sums = allc.groupBy("id").agg(F.sum("c").alias("n_reached"),
-                                      F.sum("d").alias("dist_sum"))
-    else:
-        sums = spark.createDataFrame([], "id long, n_reached long, dist_sum long")
-    nr = F.coalesce("n_reached", F.lit(0)).cast("long")
-    ds = F.coalesce("dist_sum", F.lit(0)).cast("long")
-    closeness = F.when(
-        ds > 0,
-        (nr / F.lit(n_minus_1)) * (nr / ds)).otherwise(F.lit(0.0))
-    scores = (verts.join(sums, "id", "left")
-              .select("id", nr.alias("n_reached"), ds.alias("dist_sum"),
-                      closeness.alias("closeness"))
-              .localCheckpoint(eager=True))
-    reach.unpersist()
-    for df in keep:
-        df.unpersist()
-    return ClosenessResult(scores=scores, rounds=rounds, converged=converged)
-
-
-def harmonic_centrality_hll(
-    edges: DataFrame,
-    max_t: int = 64,
-    b: int = 6,
-    universe: DataFrame | None = None,
-    direction: str = "in",
-    rel_tol: float = 1e-4,
-) -> HarmonicResult:
-    """HyperANF-style harmonic centrality (Boldi-Vigna, "Axioms for
-    centrality", Internet Math. 2014): hc(v) ≈ Σ_t (|B(v,t)|-|B(v,t-1)|)/t
-    with ball sizes from the per-vertex HLL sketches.
-
-    The per-vertex running (estimate, hc) pair rides the gather join on the
-    vertex's own self-loop row and is picked out of the aggregate with a
-    keyed MAX — the sketch relation is still referenced exactly once per
-    hop. All per-vertex arithmetic is per-row, so results are deterministic
-    across partitionings."""
-    if not 4 <= b <= 10:
-        raise ValueError(f"b must be in [4, 10], got {b}")
-    m = 1 << b
-    e = _directed(edges, direction)
-    verts = _verts(e, universe)
-    e2 = e.unionAll(verts.select(F.col("id").alias("src"),
-                                 F.col("id").alias("dst"))) \
-          .localCheckpoint(eager=True)
-
-    h = F.xxhash64(F.col("id"))
-    w = F.shiftrightunsigned(h, b)
-    rho = F.when(w == 0, F.lit(64 - b + 1)).otherwise(
-        (F.log2((w.bitwiseAND(-w)).cast("double")) + 1.0).cast("int"))
-    j = h.bitwiseAND(m - 1).cast("int")
-    est = _estimate_expr(m)
-    sk = (verts.select(
-            "id",
-            F.array(*[F.when(F.lit(i) == j, rho).otherwise(0).cast("tinyint")
-                      for i in range(m)]).alias("regs"))
-          .select("id", "regs", est.alias("pest"), F.lit(0.0).alias("hc"))
-          .localCheckpoint(eager=True))
-
-    reg_sum = F.sum(F.aggregate(F.col("regs"), F.lit(0).cast("long"),
-                                lambda acc, x: acc + x)).alias("rsum")
-    dec_est = est.cast("decimal(30,8)")
-    first = sk.select(F.sum(dec_est).alias("n"), reg_sum).first()
-    prev_n, prev_rsum = float(first["n"]), int(first["rsum"])
-    rounds, converged = 0, False
-    self_row = F.col("dst") == F.col("src")
-    for rounds in range(1, max_t + 1):
-        obs = Observation(f"hc_hll_{rounds}")
-        nxt = (
-            e2.join(sk.select(F.col("id").alias("dst"), "regs",
-                              "pest", "hc"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(*[F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)],
-                 F.max(F.when(self_row, F.col("pest"))).alias("_pest"),
-                 F.max(F.when(self_row, F.col("hc"))).alias("_hc"))
-            .select("id",
-                    F.array(*[F.col(f"_r{i}") for i in range(m)])
-                    .alias("regs"),
-                    F.col("_pest").alias("pest0"), F.col("_hc").alias("hc0"))
-            .select("id", "regs", est.alias("pest"),
-                    (F.col("hc0")
-                     + F.greatest(est - F.col("pest0"), F.lit(0.0))
-                     / F.lit(float(rounds))).alias("hc"))
-            .observe(obs, F.sum(dec_est).alias("n"), reg_sum)
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        sk.unpersist()
-        sk = nxt
-        n, rsum = float(got["n"]), int(got["rsum"])
-        if rsum == prev_rsum:
-            converged = True
-            rounds -= 1
-            break
-        # same guard as the neighborhood function: estimator dips
-        # (negative delta) are noise, not convergence
-        if 0.0 <= n - prev_n <= rel_tol * n:
-            prev_n, prev_rsum = n, rsum
-            converged = True
-            break
-        prev_n, prev_rsum = n, rsum
-    scores = sk.select("id", "hc")
-    return HarmonicResult(scores=scores, rounds=rounds, converged=converged)
+    Same first-reach table as ``harmonic_centrality_exact``, but each
+    vertex sums the two EXACT integers (#reached, Σ distance) and the
+    single double division happens once per vertex at the end, so the
+    result value-hash matches any engine computing the same expression.
+    ``direction='in'`` grows balls over reversed edges (who can reach v —
+    the classic centrality); ``'out'`` measures v's reach."""
+    grown = _first_reach(edges, direction, max_t, universe)
+    sums = grown.state.groupBy("id").agg(
+        F.count(F.when(F.col("t") > 0, 1)).alias("n_reached"),
+        F.sum("t").alias("dist_sum"))
+    scores = sums.select(
+        "id", "n_reached", "dist_sum",
+        _closeness(F.col("n_reached"), F.col("dist_sum"), grown.n_vertices)
+        .alias("closeness"))
+    return ClosenessResult(scores=scores, rounds=grown.rounds,
+                           converged=grown.converged)
 
 
 def closeness_centrality_hll(
@@ -476,89 +396,21 @@ def closeness_centrality_hll(
     """HyperANF-style closeness — the 10^12-edge scale path of
     ``closeness_centrality_exact`` (whose pair-table state is O(V·B(t))).
 
-    Same loop as ``harmonic_centrality_hll`` but the per-hop ball GROWTH
-    Δ_t = max(|B(v,t)| − |B(v,t−1)|, 0) accumulates two running per-vertex
-    sums: n_reached ≈ Σ_t Δ_t and dist_sum ≈ Σ_t t·Δ_t, from which the
-    Wasserman-Faust closeness (n/(N−1))·(n/dist_sum) is one final per-row
-    expression. Sketch state O(V·2^b); each hop is one edges⋈sketch join +
-    per-register max aggregate (the J1/A2 shape). Deterministic: all
-    per-vertex arithmetic is per-row over the keyed-MAX-extracted running
-    pair, so repeated runs agree bit-for-bit."""
-    if not 4 <= b <= 10:
-        raise ValueError(f"b must be in [4, 10], got {b}")
-    m = 1 << b
-    e = _directed(edges, direction)
-    verts = _verts(e, universe)
-    n_minus_1 = float(verts.count() - 1)
-    e2 = e.unionAll(verts.select(F.col("id").alias("src"),
-                                 F.col("id").alias("dst"))) \
-          .localCheckpoint(eager=True)
-
-    h = F.xxhash64(F.col("id"))
-    w = F.shiftrightunsigned(h, b)
-    rho = F.when(w == 0, F.lit(64 - b + 1)).otherwise(
-        (F.log2((w.bitwiseAND(-w)).cast("double")) + 1.0).cast("int"))
-    j = h.bitwiseAND(m - 1).cast("int")
-    est = _estimate_expr(m)
-    sk = (verts.select(
-            "id",
-            F.array(*[F.when(F.lit(i) == j, rho).otherwise(0).cast("tinyint")
-                      for i in range(m)]).alias("regs"))
-          .select("id", "regs", est.alias("pest"),
-                  F.lit(0.0).alias("nr"), F.lit(0.0).alias("ds"))
-          .localCheckpoint(eager=True))
-
-    reg_sum = F.sum(F.aggregate(F.col("regs"), F.lit(0).cast("long"),
-                                lambda acc, x: acc + x)).alias("rsum")
-    dec_est = est.cast("decimal(30,8)")
-    first = sk.select(F.sum(dec_est).alias("n"), reg_sum).first()
-    prev_n, prev_rsum = float(first["n"]), int(first["rsum"])
-    rounds, converged = 0, False
-    self_row = F.col("dst") == F.col("src")
-    for rounds in range(1, max_t + 1):
-        obs = Observation(f"cc_hll_{rounds}")
-        grow = F.greatest(est - F.col("pest0"), F.lit(0.0))
-        nxt = (
-            e2.join(sk.select(F.col("id").alias("dst"), "regs",
-                              "pest", "nr", "ds"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(*[F.max(F.col("regs")[i]).alias(f"_r{i}") for i in range(m)],
-                 F.max(F.when(self_row, F.col("pest"))).alias("_pest"),
-                 F.max(F.when(self_row, F.col("nr"))).alias("_nr"),
-                 F.max(F.when(self_row, F.col("ds"))).alias("_ds"))
-            .select("id",
-                    F.array(*[F.col(f"_r{i}") for i in range(m)])
-                    .alias("regs"),
-                    F.col("_pest").alias("pest0"), F.col("_nr").alias("nr0"),
-                    F.col("_ds").alias("ds0"))
-            .select("id", "regs", est.alias("pest"),
-                    (F.col("nr0") + grow).alias("nr"),
-                    (F.col("ds0") + grow * F.lit(float(rounds))).alias("ds"))
-            .observe(obs, F.sum(dec_est).alias("n"), reg_sum)
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        sk.unpersist()
-        sk = nxt
-        n, rsum = float(got["n"]), int(got["rsum"])
-        if rsum == prev_rsum:
-            converged = True
-            rounds -= 1
-            break
-        # estimator dips (negative delta) are noise, not convergence
-        if 0.0 <= n - prev_n <= rel_tol * n:
-            prev_n, prev_rsum = n, rsum
-            converged = True
-            break
-        prev_n, prev_rsum = n, rsum
-    closeness = F.when(
-        F.col("ds") > 0,
-        (F.col("nr") / F.lit(n_minus_1)) * (F.col("nr") / F.col("ds"))
-    ).otherwise(F.lit(0.0))
-    scores = sk.select("id", F.col("nr").alias("n_reached_est"),
-                       F.col("ds").alias("dist_sum_est"),
-                       closeness.alias("closeness"))
-    return ClosenessResult(scores=scores, rounds=rounds, converged=converged)
+    The per-hop ball GROWTH Δ_t = max(|B(v,t)| − |B(v,t−1)|, 0)
+    accumulates two running per-vertex sums: n_reached ≈ Σ_t Δ_t and
+    dist_sum ≈ Σ_t t·Δ_t, from which the Wasserman-Faust closeness
+    (n/(N−1))·(n/dist_sum) is one final per-row expression. Sketch state
+    O(V·2^b)."""
+    grown = _hyperanf(edges, direction, max_t, b, universe, rel_tol, carry={
+        "nr": lambda nr, grow, hop: nr + grow,
+        "ds": lambda ds, grow, hop: ds + grow * F.lit(float(hop))})
+    scores = grown.state.select(
+        "id", F.col("nr").alias("n_reached_est"),
+        F.col("ds").alias("dist_sum_est"),
+        _closeness(F.col("nr"), F.col("ds"), grown.n_vertices)
+        .alias("closeness"))
+    return ClosenessResult(scores=scores, rounds=grown.rounds,
+                           converged=grown.converged)
 
 
 def closeness_centrality(
@@ -572,7 +424,7 @@ def closeness_centrality(
     rel_tol: float = 1e-4,
 ) -> ClosenessResult:
     """Front door: Wasserman-Faust closeness, dispatching between the exact
-    pair-table plan and the HyperANF sketch plan by PROJECTED STATE SIZE —
+    first-reach plan and the HyperANF sketch plan by PROJECTED STATE SIZE —
     the same degree-adaptive routing the reference applies to its kernels
     (/root/reference/PageRankLightSpMV.cu:63-105: pick the plan the input's
     shape can afford, don't run the small-input plan at scale).
@@ -603,7 +455,7 @@ def closeness_centrality(
             growth = s1 / float(n_v)
             projected = float(n_v) * min(growth ** max_t, float(n_v))
             mode = "exact" if projected <= state_budget else "hll"
-        e.unpersist()
+        release(e)
     if mode == "exact":
         return closeness_centrality_exact(edges, max_t=max_t,
                                           universe=universe,

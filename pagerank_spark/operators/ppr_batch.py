@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from pagerank_spark.operators.graph import LinkGraph
 from pagerank_spark.operators.pagerank import ALPHA_DEFAULT
+from pagerank_spark.plans.fixpoint import release
 
 
 def personalized_pagerank_batch(
@@ -100,6 +101,6 @@ def personalized_pagerank_batch(
                     + F.lit(1.0 - alpha)) * F.col("p")).alias("rank"))
             .localCheckpoint(eager=True)
         )
-        state.unpersist()
+        release(state)
         state = nxt
     return state.select("sid", "id", "rank")

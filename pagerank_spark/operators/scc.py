@@ -10,9 +10,10 @@ Parallel Algorithms for Strongly Connected Components", IPDPS 2014):
 
   repeat on the active subgraph:
     1. trim    — vertices with zero in- or zero out-degree are singleton
-                 SCCs; peel them, LOOPING the cheap trim to its own
-                 fixpoint so DAG regions dissolve layer by layer before
-                 any expensive fixpoint runs (FW-BW-Trim).
+                 SCCs (labelled by their own id, like every vertex no
+                 settle step labels); peel them, LOOPING the cheap trim
+                 to its own fixpoint so DAG regions dissolve layer by
+                 layer before any expensive fixpoint runs (FW-BW-Trim).
     2. fwd     — hash-min fixpoint along edges: f(v) = min id of any
                  vertex that reaches v (including v).
     3. bwd     — hash-min fixpoint against edges: b(v) = min id v reaches.
@@ -23,13 +24,14 @@ Parallel Algorithms for Strongly Connected Components", IPDPS 2014):
 Every round settles at least the SCC of the smallest active id (and in
 practice many in parallel), so termination is guaranteed; on bowtie-shaped
 web graphs the giant SCC plus the IN/OUT tendrils settle in the first
-couple of rounds. Each inner hash-min round is one edges⋈labels join and
-one min-aggregate — exactly the J1/A2 shuffle shape the engine already
-optimizes — and runs O(condensation diameter) times. Worst case (a long
-directed path of descending ids) degrades to O(V) outer rounds; that is a
-known property of this family and irrelevant at bowtie topology, which is
-the 10^12-scale target. Convergence signals (changed counts, active edge
-count) ride each materialization as observed metrics — one job per round.
+couple of rounds. Each hash-min fixpoint runs on ``plans.fixpoint``; a
+round is one edges⋈labels join and one min-aggregate — exactly the J1/A2
+shuffle shape the engine already optimizes — and it runs O(condensation
+diameter) rounds. Worst case (a long directed path of descending ids)
+degrades to O(V) outer rounds; that is a known property of this family
+and irrelevant at bowtie topology, which is the 10^12-scale target.
+Convergence signals (changed counts, active edge count) ride each
+materialization as observed metrics — one job per round.
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from pagerank_spark.plans.fixpoint import fixpoint, release
 
 
 @dataclass
@@ -50,11 +54,11 @@ class SCCResult:
 
 
 def _minlabel_fixpoint(edges: DataFrame, verts: DataFrame, key: str,
-                       tag: str, max_rounds: int) -> tuple[DataFrame, bool]:
+                       max_rounds: int) -> tuple[DataFrame, bool]:
     """Hash-min to fixpoint: label(v) = min id over {v} ∪ {u : u ~> v}
     where ~> follows ``key``='dst' edges forward (ancestors) or
-    ``key``='src' edges backward (descendants). Returns
-    ``(labels (id, label), at_fixpoint)`` — ``at_fixpoint`` is False when
+    ``key``='src' edges backward (descendants). Returns ``(labels (id,
+    label, moved), at_fixpoint)`` — ``at_fixpoint`` is False when
     ``max_rounds`` ran out with labels still changing, i.e. the table is a
     TRUNCATED reachability min, NOT a fixpoint, and must not be settled on
     (a cycle longer than max_rounds would otherwise peel partial SCCs).
@@ -74,34 +78,23 @@ def _minlabel_fixpoint(edges: DataFrame, verts: DataFrame, key: str,
     and is kept (the same trade the reference makes by iterating SpMV
     rather than building reachability closures)."""
     other = "src" if key == "dst" else "dst"
-    lab = verts.select("id", F.col("id").alias("label")) \
-               .localCheckpoint(eager=True)
-    at_fixpoint = False
-    for r in range(1, max_rounds + 1):
+
+    def step(lab: DataFrame, _prev) -> DataFrame:
         gathered = (
             edges.join(lab.select(F.col("id").alias(other), "label"), other)
             .groupBy(F.col(key).alias("id"))
             .agg(F.min("label").alias("nlabel"))
         )
-        # new label + changed count ride one job (labels are monotone
-        # non-increasing, so changed==0 is a true fixpoint)
-        obs = Observation(f"scc_{tag}_{r}")
-        nxt = (
-            lab.join(gathered, "id", "left")
-            .select("id", F.col("label").alias("old"),
-                    F.least("label", F.coalesce("nlabel", "label"))
-                    .alias("label"))
-            .observe(obs, F.sum((F.col("label") != F.col("old")).cast("int"))
-                     .alias("changed"))
-            .select("id", "label")
-            .localCheckpoint(eager=True)
-        )
-        lab.unpersist()
-        lab = nxt
-        if int(obs.get["changed"] or 0) == 0:
-            at_fixpoint = True
-            break
-    return lab, at_fixpoint
+        new = F.least("label", F.coalesce("nlabel", "label"))
+        return (lab.join(gathered, "id", "left")
+                .select("id", new.alias("label"),
+                        (new != F.col("label")).alias("moved")))
+
+    # labels are monotone non-increasing, so no move is a true fixpoint
+    run = fixpoint(verts.select("id", F.col("id").alias("label")), step,
+                   [F.sum(F.col("moved").cast("int")).alias("changed")],
+                   lambda stats, _prev: not stats["changed"], max_rounds)
+    return run.state, run.converged
 
 
 def strongly_connected_components(
@@ -125,6 +118,7 @@ def strongly_connected_components(
         members = members.unionAll(universe.select("id"))
     verts = members.distinct().localCheckpoint(eager=True)
 
+    # multi-vertex SCCs only: a vertex absent from it is its own SCC
     settled = spark.createDataFrame([], "id long, scc long")
     active_v, active_e = verts, e
     rounds, converged = 0, False
@@ -136,7 +130,7 @@ def strongly_connected_components(
     prev_nv = verts.count()
     for rounds in range(1, max_rounds + 1):
         # 1. trim TO FIXPOINT (FW-BW-Trim, Slota et al. 2014): each pass
-        # settles vertices with no in- or no out-edges as singleton SCCs.
+        # drops vertices with no in- or no out-edges (singleton SCCs).
         # Looping the CHEAP trim until nothing moves dissolves any DAG
         # region layer by layer BEFORE the expensive min-label fixpoints
         # run — without it, a sparse DAG-heavy graph pays a full
@@ -148,9 +142,6 @@ def strongly_connected_components(
             outs = active_e.select(F.col("src").alias("id")).distinct()
             ins = active_e.select(F.col("dst").alias("id")).distinct()
             both = outs.join(ins, "id")                  # has in AND out
-            trimmed = active_v.join(both, "id", "left_anti") \
-                              .select("id", F.col("id").alias("scc"))
-            settled = settled.unionAll(trimmed)
             obs_v = Observation(f"scc_verts_{rounds}_{prev_nv}")
             new_v = (active_v.join(both, "id")
                      .observe(obs_v, F.count(F.lit(1)).alias("n"))
@@ -165,9 +156,9 @@ def strongly_connected_components(
             )
             m = int(obs.get["m"] or 0)
             nv = int(obs_v.get["n"] or 0)
-            # NB: the replaced active_v/active_e checkpoints stay pinned —
-            # `settled` still references them lazily until its own
-            # checkpoint in the settle step (the original discipline)
+            if active_v is not verts:
+                release(active_v)
+            release(active_e)
             active_v, active_e = new_v, new_e
             if m == 0:
                 no_edges = True
@@ -177,8 +168,6 @@ def strongly_connected_components(
             prev_nv = nv
         if no_edges:
             # remaining active vertices (if any) are isolated post-trim
-            settled = settled.unionAll(
-                active_v.select("id", F.col("id").alias("scc")))
             converged = True
             break
 
@@ -194,9 +183,9 @@ def strongly_connected_components(
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_fut = pool.submit(_minlabel_fixpoint, active_e, active_v,
-                                "dst", f"f{rounds}", max_inner_rounds)
+                                "dst", max_inner_rounds)
             b_fut = pool.submit(_minlabel_fixpoint, active_e, active_v,
-                                "src", f"b{rounds}", max_inner_rounds)
+                                "src", max_inner_rounds)
             (fwd, f_ok), (bwd, b_ok) = f_fut.result(), b_fut.result()
 
         if not (f_ok and b_ok):
@@ -209,8 +198,8 @@ def strongly_connected_components(
             # round and the active subgraph is unchanged, so re-running
             # the outer loop would just repeat the truncation — surface
             # converged=False so callers can't consume wrong labels.
-            fwd.unpersist()
-            bwd.unpersist()
+            release(fwd)
+            release(bwd)
             converged = False
             break
 
@@ -218,20 +207,23 @@ def strongly_connected_components(
         pair = fwd.join(bwd.select("id", F.col("label").alias("blabel")), "id")
         done = pair.filter(F.col("label") == F.col("blabel")) \
                    .select("id", F.col("label").alias("scc"))
+        old_settled = settled
         settled = settled.unionAll(done).localCheckpoint(eager=True)
         obs_r = Observation(f"scc_remaining_{rounds}")
         remaining = (pair.filter(F.col("label") != F.col("blabel"))
                      .select("id")
                      .observe(obs_r, F.count(F.lit(1)).alias("n"))
                      .localCheckpoint(eager=True))
-        active_v.unpersist()
+        for df in (old_settled, active_v, fwd, bwd):
+            release(df)
         active_v = remaining
         # reset the trim-fixpoint comparison to the post-settle count so
         # next round's first trim pass can detect an immediate fixpoint
         prev_nv = int(obs_r.get["n"] or 0)
-        fwd.unpersist()
-        bwd.unpersist()
 
+    if active_v is not verts:
+        release(active_v)
+    release(active_e)
     labels = verts.join(settled.withColumnRenamed("scc", "s"), "id", "left") \
                   .select("id", F.coalesce("s", F.col("id")).alias("scc"))
     return SCCResult(labels=labels, rounds=rounds, converged=converged)

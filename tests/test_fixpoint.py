@@ -14,13 +14,20 @@ from pagerank_spark.operators.components import connected_components
 from pagerank_spark.operators.coreness import coreness
 from pagerank_spark.operators.eigenvector import eigenvector_centrality
 from pagerank_spark.operators.graph import build_graph
+from pagerank_spark.operators.hits import hits, salsa
 from pagerank_spark.operators.katz import katz_centrality
 from pagerank_spark.operators.kcore import k_core
 from pagerank_spark.operators.labelprop import (label_propagation,
                                                 seeded_label_propagation,
                                                 weighted_label_propagation)
+from pagerank_spark.operators.neighborhood import (
+    closeness_centrality_exact, closeness_centrality_hll,
+    harmonic_centrality_exact, harmonic_centrality_hll,
+    neighborhood_function_exact, neighborhood_function_hll)
 from pagerank_spark.operators.pagerank import pagerank
+from pagerank_spark.operators.ppr_batch import personalized_pagerank_batch
 from pagerank_spark.operators.redirects import resolve_redirects
+from pagerank_spark.operators.scc import strongly_connected_components
 from pagerank_spark.operators.sssp import shortest_paths
 from pagerank_spark.operators.truss import k_truss
 from pagerank_spark.plans.checkpoint import SuperstepCheckpointer
@@ -72,6 +79,34 @@ OPERATORS = {
         lambda s, e, g, cap: resolve_redirects(
             s.createDataFrame(PATH, "src long, dst long"), max_hops=2 ** cap),
         1, 5),
+    "neighborhood_function_exact": (
+        lambda s, e, g, cap: neighborhood_function_exact(e, max_t=cap), 1, 6),
+    "neighborhood_function_hll": (
+        lambda s, e, g, cap: neighborhood_function_hll(
+            e, max_t=cap, b=4, rel_tol=0.0), 1, 6),
+    "harmonic_centrality_exact": (
+        lambda s, e, g, cap: harmonic_centrality_exact(e, max_t=cap), 1, 6),
+    "harmonic_centrality_hll": (
+        lambda s, e, g, cap: harmonic_centrality_hll(
+            e, max_t=cap, b=4, rel_tol=0.0), 1, 6),
+    "closeness_centrality_exact": (
+        lambda s, e, g, cap: closeness_centrality_exact(e, max_t=cap), 1, 6),
+    "closeness_centrality_hll": (
+        lambda s, e, g, cap: closeness_centrality_hll(
+            e, max_t=cap, b=4, rel_tol=0.0), 1, 6),
+    "strongly_connected_components": (
+        lambda s, e, g, cap: strongly_connected_components(e, max_rounds=cap),
+        1, 6),
+}
+
+# fixed-iteration operators (no round count in the result):
+# name -> run(spark, edges, graph, iterations)
+FIXED = {
+    "hits": lambda s, e, g, n: hits(e, iterations=n),
+    "salsa": lambda s, e, g, n: salsa(e, iterations=n),
+    "personalized_pagerank_batch": lambda s, e, g, n: personalized_pagerank_batch(
+        g, s.createDataFrame([(0, 1, 1.0), (1, 44, 1.0)],
+                             "sid long, id long, p double"), iterations=n),
 }
 
 
@@ -96,6 +131,14 @@ def test_pinned_state_does_not_grow_with_rounds(spark, edges, graph, name):
     few, pinned_few = _pinned_by(spark, lambda: run(spark, edges, graph, small))
     many, pinned_many = _pinned_by(spark, lambda: run(spark, edges, graph, large))
     assert _rounds(many) > _rounds(few), name  # the fixture really iterates
+    assert len(pinned_many) <= len(pinned_few), (name, pinned_few, pinned_many)
+
+
+@pytest.mark.parametrize("name", sorted(FIXED))
+def test_pinned_state_does_not_grow_with_iterations(spark, edges, graph, name):
+    run = FIXED[name]
+    _, pinned_few = _pinned_by(spark, lambda: run(spark, edges, graph, 1))
+    _, pinned_many = _pinned_by(spark, lambda: run(spark, edges, graph, 6))
     assert len(pinned_many) <= len(pinned_few), (name, pinned_few, pinned_many)
 
 
