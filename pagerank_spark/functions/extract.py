@@ -1,11 +1,25 @@
-"""Vectorized page-content extraction (Arrow pandas UDFs — no per-row Python).
+"""Page-content extraction as Arrow pandas UDFs.
 
 These are the engine's analogue of the reference's edge-list parser
 ``getInputResultForCsc`` (/root/reference/kernel_bblock.cu:567-619): they turn
 the raw page payload into the text column and the outlink list that becomes
 the edge table. Per BASELINE.json ``input_hint`` the extracted text must be
-byte-identical per url on every run — both UDFs are pure regex transforms of
+byte-identical per url on every run — the UDFs are pure regex transforms of
 the html bytes with no locale, time, or partition dependence.
+
+Each UDF gets a batch as a pandas Series. ``_decode`` turns the bytes into
+str one row at a time (a per-row ``.apply``); the regex passes after it
+are vectorized pandas ``.str`` calls over the batch.
+
+The UDFs are pure and cache nothing, so each scan of a frame that holds an
+extraction column runs the UDF again, and Python dominates that cost. An
+``explode`` of a UDF *output column* runs it twice per scan: Catalyst's
+``InferFiltersFromGenerate`` adds ``size(col) > 0 AND isnotnull(col)`` below
+the explode, and that filter plants a second ``ArrowEvalPython`` node.
+Callers therefore either explode the UDF call itself, in the same
+``select`` (``operators/anchors.py``, ``streaming/ingest.py``), or persist
+the UDF output before the explode when several scans read it
+(``operators/graph.py::edges_from_pages``).
 """
 
 from __future__ import annotations

@@ -93,10 +93,13 @@ def host_graph_from_pages(
         "host",
     ).select("id", "gid")
     hedges = contract_graph(edges, mapping)
-    return build_graph(
+    g = build_graph(
         spark,
         hedges,
         url_dict=hdict,
         edge_partitions=edge_partitions,
         universe=hdict.select("id"),
     )
+    edges.unpersist()
+    d.unpersist()
+    return g

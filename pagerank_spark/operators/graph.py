@@ -20,6 +20,18 @@ per-partition offset + row-number-within-partition recovered from
 Python serialization of the url universe, no single-partition window. Ids
 are an internal detail, exactly as the reference's 1->0 index shift is
 (load-time-only there too, /root/reference/kernel_bblock.cu:590-592).
+
+Extract once: the reference parses its edge list exactly once, and so does
+``edges_from_pages``. The per-page ``(src_url, outs)`` frame is persisted
+*before* it is exploded. Left lazy, every scan of the edges (the url
+dictionary, the two id joins, the degree and weight passes) would re-run
+the ``extract_outlinks`` UDF, and each scan would run it twice: Catalyst's
+``InferFiltersFromGenerate`` adds ``size(outs) > 0 AND isnotnull(outs)``
+below the ``explode``, and that filter reads the UDF column, so a second
+``ArrowEvalPython`` node is planted under it. Over the cache the inferred
+filter reads the ``InMemoryRelation`` instead. The id edge table built from
+it is pinned once, the UDF cache is freed, and ``build_graph`` reads cached
+longs.
 """
 
 from __future__ import annotations
@@ -90,17 +102,23 @@ def url_id_dictionary(urls: DataFrame, partitions: int | None = None) -> DataFra
 def edges_from_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """pages -> (edges(src,dst) long, url_dict(url,id)).
 
-    Outlinks come from the vectorized ``extract_outlinks`` pandas UDF; the
-    vertex universe is crawled urls UNION link-target urls (targets outside
-    the crawl become dangling vertices, like SNAP ids with no out-edges).
+    Outlinks come from the vectorized ``extract_outlinks`` pandas UDF, run
+    once per page; the vertex universe is crawled urls UNION link-target
+    urls (targets outside the crawl become dangling vertices, like SNAP ids
+    with no out-edges).
+
+    Both returned frames are persisted and materialized, and the caller owns
+    them: unpersist them once consumed. The edges can go as soon as
+    ``build_graph`` returns, since it materializes its own tables.
     """
-    raw = (
+    outs = (
         pages.select(F.col("url").alias("src_url"),
                      extract_outlinks(F.col("html")).alias("outs"))
-        .select("src_url", F.explode("outs").alias("dst_url"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    raw = outs.select("src_url", F.explode("outs").alias("dst_url"))
     urls = (
-        pages.select("url")
+        outs.select(F.col("src_url").alias("url"))
         .unionByName(raw.select(F.col("dst_url").alias("url")))
         .distinct()
     )
@@ -111,7 +129,10 @@ def edges_from_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
         .join(d.withColumnRenamed("url", "dst_url").withColumnRenamed("id", "dst"),
               "dst_url")
         .select("src", "dst")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    edges.count()  # pin the id edges before the UDF output they are built from
+    outs.unpersist()
     return edges, d
 
 
@@ -242,8 +263,10 @@ def graph_from_pages(spark: SparkSession, pages: DataFrame,
     # vertex universe = the full url dictionary: an isolated page (no in- or
     # out-links) still holds rank mass, exactly as the reference's id space
     # 0..n-1 includes unreferenced vertices.
-    return build_graph(spark, edges, url_dict=d, edge_partitions=edge_partitions,
-                       universe=d.select("id"))
+    g = build_graph(spark, edges, url_dict=d, edge_partitions=edge_partitions,
+                    universe=d.select("id"))
+    edges.unpersist()
+    return g
 
 
 def simple_edges(edges: DataFrame) -> DataFrame:

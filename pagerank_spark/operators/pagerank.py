@@ -40,7 +40,7 @@ import math
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.graph import LinkGraph, hot_vertex_salts, salted_edges
@@ -172,6 +172,7 @@ def pagerank(
     # iteration's dangling mass (A3), and the conservation check — no extra
     # joins (the DataFrame analogue of the reference fusing `remain_value`
     # into its SpMV kernels, kernel_bblock.cu:966).
+    dangling = F.sum(F.when(F.col("is_dangling"), F.col("rank")))
     start_iter, state = resume_point(ckpt, resume)
     if state is not None:
         if "is_dangling" not in state.columns:  # pre-fusion checkpoint
@@ -193,6 +194,7 @@ def pagerank(
             state = state.join(
                 teleport.select("id", "p"), "id", "left"
             ).withColumn("p", F.coalesce("p", F.lit(0.0)))
+        mass = state.agg(dangling).first()[0] if dangling_redistribution else 0.0
     if state is None:
         if init_ranks is not None:
             # warm start (incremental recompute): seed from a previous run's
@@ -235,17 +237,16 @@ def pagerank(
             state = state.join(
                 teleport.select("id", "p"), "id", "left"
             ).withColumn("p", F.coalesce("p", F.lit(0.0)))
-        state = ckpt.save(0, state)
+        obs = Observation()
+        state = ckpt.save(0, state.observe(obs, dangling.alias("mass")))
+        mass = obs.get["mass"]
 
     # A3 for the first superstep: dangling mass of the initial/loaded ranks
     # (one scalar to the driver, the cudaMemcpy of kernel_bblock.cu:965;
+    # observed on the iter=0 save of a fresh run, one aggregate on resume;
     # subsequent masses ride along in the per-superstep stats aggregate).
     # P8 fork: the lightSpMV path never redistributes (mass pinned to 0).
-    mass = 0.0
-    if dangling_redistribution:
-        mass = float(
-            state.agg(F.sum(F.when(F.col("is_dangling"), F.col("rank")))).first()[0]
-            or 0.0)
+    mass = float(mass or 0.0) if dangling_redistribution else 0.0
 
     bins = None
     if bin_telemetry:
@@ -318,7 +319,7 @@ def pagerank(
         state, step,
         [F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("l1"),
          F.sum(F.pow(F.col("rank") - F.col("prev_rank"), 2)).alias("l2sq"),
-         F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("next_mass"),
+         dangling.alias("next_mass"),
          F.sum("rank").alias("mass_sum")],
         stop, max_iter, checkpointer=ckpt, start=start_iter,
         stats={"next_mass": mass}, record=record)

@@ -77,12 +77,17 @@ class SuperstepCheckpointer:
         self.metrics = []
 
     def save(self, iteration: int, ranks: DataFrame) -> DataFrame:
-        """Materialize this superstep's ranks and return a lineage-free DF."""
+        """Materialize this superstep's ranks and return a lineage-free DF.
+
+        The read-back takes the schema from ``ranks`` instead of inferring it
+        from the footers, which would cost a Spark job per round; a file
+        source makes every field nullable, so the result is the schema
+        ``load`` infers."""
         if self.dir is None:
             return ranks.localCheckpoint(eager=True)
         path = self._iter_path(iteration)
         ranks.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(ranks.schema).parquet(path)
 
     def record(self, iteration: int, ranks: DataFrame, **metric: Any) -> dict[str, Any]:
         """Append one metrics row (the telemetry sink S4 of the reference,

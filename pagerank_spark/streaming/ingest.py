@@ -43,12 +43,11 @@ def stream_pages(spark: SparkSession, path: str,
 def edges_of_batch(pages: DataFrame) -> DataFrame:
     """(src_url, dst_url, src, dst, warc_ts) for one batch of pages —
     hash-keyed vertex ids, in-batch dedup keeping the latest recrawl."""
-    raw = (
-        pages.select("url", "warc_ts",
-                     extract_outlinks(F.col("html")).alias("outs"))
-        .select(F.col("url").alias("src_url"), "warc_ts",
-                F.explode("outs").alias("dst_url"))
-    )
+    # explode the UDF call itself: exploding a UDF output column would let
+    # Catalyst infer a filter on that column below the explode and plant a
+    # second ArrowEvalPython under it (see operators/graph.py)
+    raw = pages.select(F.col("url").alias("src_url"), "warc_ts",
+                       F.explode(extract_outlinks(F.col("html"))).alias("dst_url"))
     # a page recrawled within the batch: keep its newest snapshot's links
     latest = (raw.groupBy("src_url")
               .agg(F.max("warc_ts").alias("warc_ts")))
