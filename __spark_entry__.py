@@ -4131,11 +4131,14 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus through the word -> symbolization dictionary join. The oracle
     replays training to the final dictionary (the shared _bpe_parts
     chain) and re-tokenizes every document through it, so each doc's full
-    subword sequence is value-hash-pinned end to end."""
+    subword sequence is value-hash-pinned end to end. The tokens are
+    projected space-joined (no token contains a space) so the column
+    hashes as a plain string."""
     from pagerank_spark.operators.bpe import bpe_encode, bpe_train
     docs = _t(spark, sf_dir, "documents")
     trained = bpe_train(docs, merges=BPE_MERGES)
-    return bpe_encode(docs, trained)
+    return bpe_encode(docs, trained).select(
+        "doc_id", "n_tokens", F.array_join("tokens", " ").alias("tokens"))
 
 
 def _bpe_encode_sql(merges: int = BPE_MERGES) -> str:
@@ -4149,7 +4152,7 @@ def _bpe_encode_sql(merges: int = BPE_MERGES) -> str:
     ]
     return ("WITH " + ",\n".join(parts) + """
 SELECT d.doc_id, CAST(coalesce(len(e.toks), 0) AS INT) AS n_tokens,
-       coalesce(e.toks, []) AS tokens
+       array_to_string(coalesce(e.toks, []), ' ') AS tokens
 FROM documents d LEFT JOIN enc e USING (doc_id)
 """)
 

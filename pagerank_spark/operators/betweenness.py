@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.fixpoint import release
+
 
 @dataclass
 class BetweennessResult:
@@ -84,12 +86,13 @@ def betweenness(
             .localCheckpoint(eager=True)
         )
         if not nxt.take(1):
+            release(nxt)
             break
         depth = t
         levels.append(nxt)
         new_seen = seen.unionByName(nxt.select("s", "v")) \
                        .localCheckpoint(eager=True)
-        seen.unpersist()
+        release(seen)
         seen = new_seen
 
     # backward accumulation: δ over levels depth-1 .. 1
@@ -122,7 +125,10 @@ def betweenness(
         # level t+1 was consumed into d (eager checkpoint) and the
         # backward walk only descends — release its cached blocks now
         # instead of pinning every forward level until the pass ends
-        levels[t + 1].unpersist()
+        release(levels[t + 1])
+    # the scores read only verts and the deltas
+    for df in (e, seen, *levels[:2]):
+        release(df)
 
     if deltas:
         allv = deltas[0]

@@ -33,6 +33,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pagerank_spark.plans.fixpoint import release
+
 
 @dataclass
 class BfsResult:
@@ -46,54 +48,17 @@ def bfs_hops(
     sources: Sequence[int] | DataFrame,
     max_hops: int = 20,
 ) -> BfsResult:
-    """Minimum hop distance from ``sources`` along directed ``edges``."""
-    spark = edges.sparkSession
+    """Minimum hop distance from ``sources`` along directed ``edges``: the
+    landmark loop below with every source under one landmark key."""
     if isinstance(sources, DataFrame):
-        src_df = sources.select("id").distinct()
+        ids = sources.select("id")
     else:
-        # dedupe list input too — duplicated source ids must not produce
-        # duplicated rows (same contract as the DataFrame form)
-        src_df = spark.createDataFrame(
-            [(int(s),) for s in sorted({int(s) for s in sources})], "id long")
-
-    # pin the (src, dst) projection once: the loop scans it every round, and
-    # the frontier side is the small (broadcast) side of each join
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-
-    # append-only visited state: one checkpointed layer per round; the
-    # visited VIEW is the lazy union of layers (flat scan of materialized
-    # leaves), so a superstep writes O(frontier), not O(V)
-    layers = [src_df.select("id", F.lit(0).alias("dist"))
-              .localCheckpoint(eager=True)]
-    frontier = layers[0].select("id")
-    rounds = 0
-    exhausted = False
-    for rounds in range(1, max_hops + 1):
-        visited_ids = reduce(DataFrame.unionAll,
-                             (l.select("id") for l in layers))
-        candidates = (
-            edges.join(frontier.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        obs = Observation(f"bfs_round_{rounds}")
-        new_frontier = (
-            candidates.join(visited_ids, "id", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = int(obs.get["n"] or 0)
-        if n_new == 0:
-            new_frontier.unpersist()
-            rounds -= 1
-            exhausted = True
-            break
-        # the layer is a lazy projection over the already-checkpointed
-        # frontier — no second materialization
-        layers.append(new_frontier.select("id", F.lit(rounds).alias("dist")))
-        frontier = new_frontier
-    distances = reduce(DataFrame.unionAll, layers)
-    return BfsResult(distances=distances, rounds=rounds, exhausted=exhausted)
+        ids = edges.sparkSession.createDataFrame(
+            [(int(s),) for s in sources], "id long")
+    res = _layers(edges, ids.select(F.lit(0).cast("long").alias("lm"), "id")
+                  .distinct(), max_hops)
+    return BfsResult(distances=res.distances.select("id", "dist"),
+                     rounds=res.rounds, exhausted=res.exhausted)
 
 
 @dataclass
@@ -121,24 +86,27 @@ def landmark_bfs(
     anti-join against the visited set; state is O(V·k), the price of any
     k-landmark oracle.
     """
-    spark = edges.sparkSession
     if isinstance(landmarks, DataFrame):
-        lm_df = landmarks.select(F.col(landmarks.columns[0]).alias("lm")) \
-                         .distinct()
+        lm_df = landmarks.select(F.col(landmarks.columns[0]).alias("lm"))
     else:
-        # dedupe list input too (round-4 advice): repeated landmark ids in a
-        # Sequence must not duplicate (lm, id, dist) rows — both input forms
-        # behave identically
-        lm_df = spark.createDataFrame(
-            [(int(s),) for s in sorted({int(s) for s in landmarks})],
-            "lm long")
+        lm_df = edges.sparkSession.createDataFrame(
+            [(int(s),) for s in landmarks], "lm long")
+    return _layers(edges, lm_df.select("lm", F.col("lm").alias("id"))
+                   .distinct(), max_hops)
+
+
+def _layers(edges: DataFrame, start: DataFrame,
+            max_hops: int) -> LandmarkResult:
+    """BFS from the distinct (lm, id) rows of ``start``, one distance
+    field per lm. Repeated start rows never repeat output rows."""
+    # pin the (src, dst) projection once: the loop scans it every round, and
+    # the frontier side is the small (broadcast) side of each join
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    # append-only visited state (round-4 verdict item 5): per-round layers,
-    # each a checkpointed frontier; the anti-join reads their lazy union, so
-    # a superstep writes O(frontier) instead of rewriting the O(V·k) set
-    layers = [lm_df.select(
-        "lm", F.col("lm").alias("id"), F.lit(0).alias("dist")
-    ).localCheckpoint(eager=True)]
+    # append-only visited state: one checkpointed layer per round; the
+    # visited VIEW is the lazy union of layers (flat scan of materialized
+    # leaves), so a superstep writes O(frontier), not O(V·k)
+    layers = [start.select("lm", "id", F.lit(0).alias("dist"))
+              .localCheckpoint(eager=True)]
     frontier = layers[0].select("lm", "id")
     rounds, exhausted = 0, False
     for rounds in range(1, max_hops + 1):
@@ -150,20 +118,23 @@ def landmark_bfs(
             .select("lm", F.col("dst").alias("id"))
             .distinct()
         )
-        obs = Observation(f"lmbfs_round_{rounds}")
+        obs = Observation()
         new_frontier = (
             candidates.join(visited_keys, ["lm", "id"], "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
         if not int(obs.get["n"] or 0):
-            new_frontier.unpersist()
+            release(new_frontier)
             rounds -= 1
             exhausted = True
             break
+        # the layer is a lazy projection over the already-checkpointed
+        # frontier — no second materialization
         layers.append(new_frontier.select(
             "lm", "id", F.lit(rounds).alias("dist")))
-        frontier = new_frontier.select("lm", "id")
+        frontier = new_frontier
+    release(edges)
     return LandmarkResult(distances=reduce(DataFrame.unionAll, layers),
                           rounds=rounds, exhausted=exhausted)
 

@@ -3,14 +3,21 @@
 Absent from the reference (SURVEY.md §2.9); mandated by the north rule.
 Algorithm: Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SoCC'14) — alternating star operations converge in O(log^2 n) rounds on
-any graph (empirically ~log n), each round two groupBy-aggregations over
-the edge set. This is the scalable choice at 10^12 edges: no O(diameter)
-propagation, no driver-side state beyond a convergence scalar.
+any graph (empirically ~log n). This is the scalable choice at 10^12
+edges: no O(diameter) propagation, no driver-side state beyond a
+convergence scalar.
 
   large-star: for each vertex u and its neighborhood N(u) (both directions),
               m = min({u} ∪ N(u)); emit (v, m) for v ∈ N(u), v > u
   small-star: key every edge by its larger endpoint: (u = max, v = min);
               m = min(N(u)); emit (u, m) and (v, m) for v ∈ N(u), v ≠ m
+
+Round shape: each star's min is a window keyed by the vertex, one
+exchange of the edge rows and no aggregate joined back; the small star's
+min ignores the large star's repeated rows and its one distinct drops
+them. Scale trade: a window holds one vertex's rows in a spillable buffer
+inside ONE task, which AQE cannot split like a skewed join; salt a hub's
+rows if one ever dominates a round.
 
 Convergence: the edge multiset stops changing. We detect it with
 (count, sum of xxhash64(src,dst)) collected as OBSERVED metrics on each
@@ -23,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.graph import simple_edges
@@ -38,32 +45,24 @@ class ComponentsResult:
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
-    # symmetric neighborhoods
+    # m = min of u's symmetric neighborhood and u itself
     sym = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    m = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
-    return (
-        sym.join(m, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
+    return sym.select("src", "dst", m.alias("m")).filter(
+        F.col("dst") > F.col("src")).select(F.col("dst").alias("src"),
+                                            F.col("m").alias("dst"))
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
-    # key by larger endpoint; neighbors are the smaller ones
+    # key by larger endpoint u; m = min of its smaller neighbors v. Every
+    # row emits (u, m) and, unless v is m, (v, m)
     keyed = edges.select(
-        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-    )
-    m = keyed.groupBy("u").agg(F.min("v").alias("m"))
-    with_m = keyed.join(m, "u")
-    out = with_m.filter(F.col("v") != F.col("m")).select(
-        F.col("v").alias("src"), F.col("m").alias("dst")
-    ).unionAll(m.select(F.col("u").alias("src"), F.col("m").alias("dst")))
-    return out.distinct()
+        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v"))
+    star = keyed.select(
+        "u", "v", F.min("v").over(Window.partitionBy("u")).alias("m")
+    ).select(F.explode(F.array("u", "v")).alias("src"), F.col("m").alias("dst"))
+    return star.filter(F.col("src") != F.col("dst")).distinct()
 
 
 def connected_components(

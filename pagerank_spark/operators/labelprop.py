@@ -11,20 +11,25 @@ NumPy oracle can assert equality):
   ``max_rounds``.
 
 DataFrame formulation per round (SURVEY.md §2.9): join labels onto the
-symmetric edge list, count by (vertex, label), then one max_by aggregation
-picking struct(count, -label) — no window function, so the round is two
-shuffles on (vertex) and (vertex, label).
+symmetric edge list (one vote row per neighbor), union each vertex's own
+row and run ONE id-keyed aggregate: deterministic ``mode(vote)`` is the
+most frequent vote, ties to the smallest, and the own label rides along
+for the fallback and the changed flag — the edge join plus one shuffle.
+Scale trade: ``mode`` holds a vertex's distinct neighbor labels in one
+unspillable map (a round-1 hub: one entry per neighbor), where counting
+per (vertex, label) first was skew-safe; salt a hub's votes if one ever
+overflows a task.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pagerank_spark.operators.graph import simple_edges, symmetric_edges
-from pagerank_spark.plans.fixpoint import fixpoint, resume_point
+from pagerank_spark.plans.fixpoint import fixpoint, release, resume_point
 
 
 @dataclass
@@ -34,17 +39,6 @@ class LabelPropResult:
     converged: bool
 
 
-# vertices whose label moved this round, observed on the round's own
-# materialization: one Spark job per round, not a round job plus a
-# compare-join job
-def _changed() -> list:
-    return [F.sum("chg").alias("changed")]
-
-
-def _settled(stats, _prev) -> bool:
-    return not stats["changed"]
-
-
 def _vertices(sym: DataFrame, universe: DataFrame | None) -> DataFrame:
     vertices = sym.select(F.col("src").alias("id")).distinct()
     if universe is not None:
@@ -52,18 +46,35 @@ def _vertices(sym: DataFrame, universe: DataFrame | None) -> DataFrame:
     return vertices
 
 
-def _best(counts: DataFrame) -> DataFrame:
-    """(id, new_label): the label with the largest ``c`` per vertex, ties ->
-    min label — a max over struct(c, -label), no window function."""
-    return counts.groupBy("id").agg(
-        F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("s")
-    ).select("id", (-F.col("s.nl")).alias("new_label"))
+def _neighbors(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    # for edge (src, dst), vertex src sees vote = label(dst)
+    return sym.join(labels.select(F.col("id").alias("dst"), F.col("label")
+                                  .alias("vote")), "dst").withColumnRenamed("src", "id")
 
 
-def _relabel(labels: DataFrame, best: DataFrame) -> DataFrame:
-    return labels.join(best, "id", "left").select(
-        "id", F.coalesce("new_label", F.col("label")).alias("label"),
-        (F.col("new_label") != F.col("label")).cast("int").alias("chg"))
+def _tally(votes: DataFrame, own: DataFrame, new: Column) -> DataFrame:
+    """One aggregate per id over the vote rows and the own row: ``new``
+    over the votes, the max (the one value) of every other ``own`` column."""
+    return votes.unionByName(own, allowMissingColumns=True).groupBy("id").agg(
+        new.alias("new"), *[F.max(c).alias(c) for c in own.columns[1:]])
+
+
+def _vote(votes: DataFrame, labels: DataFrame, new: Column) -> DataFrame:
+    own = labels.select("id", F.col("label").alias("own"))
+    return _tally(votes, own, new).select(
+        "id", F.coalesce("new", "own").alias("label"),
+        (F.col("new") != F.col("own")).cast("int").alias("chg"))
+
+
+def _propagate(sym: DataFrame, state: DataFrame, step, max_rounds: int,
+               **kw) -> LabelPropResult:
+    # vertices whose label moved, observed on the round's own
+    # materialization: one Spark job per round, no compare-join job
+    run = fixpoint(state, step, [F.sum("chg").alias("changed")],
+                   lambda stats, _prev: not stats["changed"], max_rounds, **kw)
+    release(sym)  # the labels are the last round, which does not read it
+    return LabelPropResult(labels=run.state.select("id", "label"),
+                           rounds=run.rounds, converged=run.converged)
 
 
 def label_propagation(
@@ -81,24 +92,16 @@ def label_propagation(
     superstep-resume contract as ``pagerank()``. ``None`` keeps the
     in-memory ``localCheckpoint`` path."""
     sym = symmetric_edges(simple_edges(edges)).localCheckpoint(eager=True)
-    vertices = _vertices(sym, universe).localCheckpoint(eager=True)
-
     start_round, labels = resume_point(checkpointer, resume)
     if labels is None:
-        labels = vertices.select("id", F.col("id").alias("label"))
+        labels = _vertices(sym, universe).select(
+            "id", F.col("id").alias("label")).localCheckpoint(eager=True)
 
     def step(labels: DataFrame, _prev) -> DataFrame:
-        # neighbor labels: for edge (src,dst), vertex src sees label(dst)
-        neigh = sym.join(
-            labels.select(F.col("id").alias("dst"), "label"), "dst"
-        ).select(F.col("src").alias("id"), "label")
-        return _relabel(labels, _best(
-            neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c"))))
+        return _vote(_neighbors(sym, labels), labels, F.mode("vote", True))
 
-    run = fixpoint(labels, step, _changed(), _settled, max_rounds,
-                   checkpointer=checkpointer, start=start_round)
-    return LabelPropResult(labels=run.state.select("id", "label"),
-                           rounds=run.rounds, converged=run.converged)
+    return _propagate(sym, labels, step, max_rounds,
+                      checkpointer=checkpointer, start=start_round)
 
 
 def weighted_label_propagation(
@@ -121,9 +124,9 @@ def weighted_label_propagation(
     Determinism/oracle note: the argmax tie-break compares summed weights
     for exact equality, so weights should be exactly summable (integers,
     or doubles with exact binary representations) for cross-engine
-    value-hash parity. Round shape matches ``label_propagation``: two
-    hash-aggregate shuffles, no window, O(E)+O(V) state — the 100-TB plan
-    is unchanged, only COUNT becomes SUM(w).
+    value-hash parity. Round shape: SUM(w) per (vertex, label), then
+    ``label_propagation``'s one vote aggregate over max(struct(SUM, -label))
+    — two shuffles, no window, O(E)+O(V) state, skew-safe.
     """
     sym = symmetric_edges(
         edges.filter(F.col("src") != F.col("dst"))
@@ -132,19 +135,16 @@ def weighted_label_propagation(
                 F.col(weight_col).cast("double").alias("w"))
         .groupBy("a", "b").agg(F.sum("w").alias("w")), "w"
     ).localCheckpoint(eager=True)
-    vertices = _vertices(sym, universe).localCheckpoint(eager=True)
+    labels = _vertices(sym, universe).select(
+        "id", F.col("id").alias("label")).localCheckpoint(eager=True)
 
     def step(labels: DataFrame, _prev) -> DataFrame:
-        neigh = sym.join(
-            labels.select(F.col("id").alias("dst"), "label"), "dst"
-        ).select(F.col("src").alias("id"), "label", "w")
-        return _relabel(labels, _best(
-            neigh.groupBy("id", "label").agg(F.sum("w").alias("c"))))
+        votes = _neighbors(sym, labels).groupBy("id", "vote").agg(
+            F.struct(F.sum("w"), (-F.col("vote")).alias("nl")).alias("s"))
+        # the largest summed weight, ties -> the smallest label
+        return _vote(votes, labels, -F.max("s")["nl"])
 
-    run = fixpoint(vertices.select("id", F.col("id").alias("label")), step,
-                   _changed(), _settled, max_rounds)
-    return LabelPropResult(labels=run.state.select("id", "label"),
-                           rounds=run.rounds, converged=run.converged)
+    return _propagate(sym, labels, step, max_rounds)
 
 
 def seeded_label_propagation(
@@ -161,9 +161,9 @@ def seeded_label_propagation(
     continuous trust mass (Gyongyi et al., VLDB'04), and the classic
     guilt-by-association spam classifier over the host graph.
 
-    Same round shape as ``label_propagation`` (two shuffles, no window);
-    the only additions are a labeled-neighbor filter and the pinned-seed
-    coalesce. Unreached vertices return ``label = NULL``.
+    Same round shape as ``label_propagation`` (its own row also carries the
+    seed); the only additions are a labeled-neighbor filter and the
+    pinned-seed coalesce. Unreached vertices return ``label = NULL``.
     """
     sym = symmetric_edges(simple_edges(edges)).localCheckpoint(eager=True)
     seed_tbl = seeds.select("id", F.col("label").cast("long").alias("seed_label"))
@@ -172,16 +172,11 @@ def seeded_label_propagation(
              .localCheckpoint(eager=True))
 
     def step(state: DataFrame, _prev) -> DataFrame:
-        neigh = sym.join(
-            state.filter(F.col("label").isNotNull())
-            .select(F.col("id").alias("dst"), "label"), "dst"
-        ).select(F.col("src").alias("id"), "label")
-        best = _best(neigh.groupBy("id", "label").agg(F.count(F.lit(1)).alias("c")))
-        label = F.coalesce("seed_label", "new_label", "label")
-        return state.join(best, "id", "left").select(
+        votes = _neighbors(sym, state.filter(F.col("label").isNotNull()))
+        own = state.select("id", F.col("label").alias("own"), "seed_label")
+        label = F.coalesce("seed_label", "new", "own")
+        return _tally(votes, own, F.mode("vote", True)).select(
             "id", label.alias("label"), "seed_label",
-            (~label.eqNullSafe(F.col("label"))).cast("int").alias("chg"))
+            (~label.eqNullSafe(F.col("own"))).cast("int").alias("chg"))
 
-    run = fixpoint(state, step, _changed(), _settled, max_rounds)
-    return LabelPropResult(labels=run.state.select("id", "label"),
-                           rounds=run.rounds, converged=run.converged)
+    return _propagate(sym, state, step, max_rounds)

@@ -135,8 +135,9 @@ def _grow(state: DataFrame, stats: Stats, n_vertices: int,
           plateau: Callable[[Stats, Stats], bool] | None = None) -> _Growth:
     """Run the hops of either loop; ``metrics`` observe the ball-size sum
     ``n`` each hop. A saturated hop moved nothing, so it is not counted:
-    N(t) was already flat at the hop before."""
-    counts, flat = [float(stats["n"])], []
+    N(t) was already flat at the hop before. With no vertices the
+    sketch sums are NULL: N(t) is 0, as the exact row count says."""
+    counts, flat = [float(stats["n"] or 0)], []
 
     def stop(stats: Stats, prev: Stats) -> bool:
         if saturated(stats, prev):

@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pagerank_spark.operators.betweenness import betweenness
+from pagerank_spark.operators.bfs import bfs_hops, landmark_bfs
 from pagerank_spark.operators.components import connected_components
 from pagerank_spark.operators.coreness import coreness
 from pagerank_spark.operators.eigenvector import eigenvector_centrality
@@ -200,3 +202,27 @@ def test_release_frees_a_local_checkpoint(spark):
     release(df)
     assert not set(jsc.getPersistentRDDs().keySet()) - before
     release(spark.range(3))  # a lazy plan is left alone
+
+
+# frontier loops whose result is a union of per-round frames:
+# name -> run(spark, edges, hops) -> (result, rounds)
+FRONTIER = {
+    "bfs_hops": lambda s, e, n: (lambda r: (r, r.rounds))(
+        bfs_hops(e, [0], max_hops=n)),
+    "landmark_bfs": lambda s, e, n: (lambda r: (r, r.rounds))(
+        landmark_bfs(e, [0, 40], max_hops=n)),
+    "betweenness": lambda s, e, n: (lambda r: (r, r.depth))(
+        betweenness(e, k_sources=4, max_depth=n)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FRONTIER))
+def test_frontier_loops_pin_only_what_the_result_reads(spark, edges, name):
+    run = FRONTIER[name]
+    (_, few), pinned_few = _pinned_by(spark, lambda: run(spark, edges, 1))
+    (_, many), pinned_many = _pinned_by(spark, lambda: run(spark, edges, 40))
+    assert many > few, name
+    # at most one frame per extra round (a BFS layer, a betweenness delta)
+    # survives the call: the returned lazy union reads it
+    assert len(pinned_many) - len(pinned_few) <= many - few, (
+        name, pinned_few, pinned_many)

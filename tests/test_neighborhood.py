@@ -225,3 +225,19 @@ def test_closeness_hll_state_is_linear_on_hub(spark):
     est = {r.id: r.n_reached_est for r in res.scores.collect()}
     for v, e in est.items():
         assert abs(e - n) / n < 0.35, (v, e)
+
+
+@pytest.mark.parametrize("name", ["neighborhood_function", "harmonic_centrality",
+                                  "closeness_centrality"])
+def test_hll_on_a_graph_with_no_vertices_matches_exact(spark, name):
+    from pagerank_spark.operators import neighborhood as nb
+
+    e = spark.createDataFrame([], "src long, dst long")
+    exact = getattr(nb, f"{name}_exact")(e)
+    hll = getattr(nb, f"{name}_hll")(e)
+    assert (hll.rounds, hll.converged) == (exact.rounds, exact.converged) == (0, True)
+    if name == "neighborhood_function":
+        assert hll.counts == exact.counts == [0.0]
+        assert [tuple(r) for r in hll.nf.collect()] == [(0, 0.0)]
+    else:
+        assert hll.scores.count() == exact.scores.count() == 0
